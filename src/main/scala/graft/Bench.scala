@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at the configured
   * scale factor and prints one JSON line. Queries run in sorted name
   * order after a JVM/codegen warmup pass so timings are deterministic
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Between-query cleanup — see GraftSession.release scaladoc (the
     // localCheckpoint-block sweep is worth ~8.6s suite-wide and is
@@ -44,7 +36,7 @@ object Bench {
     // (measured: +65% total). Heap pressure from prior queries can
     // land ~1-2s in whichever query triggers the old-gen collection
     // (dedup_clusters reads 3.4s in-suite vs 1.5s standalone); use
-    // tools/BenchOne for pressure-free single-query numbers.
+    // tools/Profile for pressure-free single-query numbers.
     // Two timed passes per query, report the MIN: a single timed pass is
     // hostage to transient CPU steal on a shared driver host (round 4's
     // permanent record read 177.66s for an engine that runs 83s clean —

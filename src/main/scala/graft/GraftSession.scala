@@ -187,7 +187,7 @@ object GraftSession {
     java.nio.file.Files.deleteIfExists(p)
   }
 
-  /** Between-query storage sweep shared by Bench/BenchOne/Verify.
+  /** Between-query storage sweep shared by Bench/Profile/Verify.
     * clearCache drops catalog-cached frames, but localCheckpoint blocks
     * (the CC loop, q70's edge relation) are RDD storage the catalog
     * never tracks — without the explicit unpersist sweep they free only

@@ -10,68 +10,41 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
+  /** Every query module, each named once (a repeat fails the merge). */
+  private val modules: Seq[QueryModule] = Seq(
+    RelationalQueries, RelationalQueries2, RelationalQueries3,
+    RelationalQueries4, RelationalQueries5, RelationalQueries6,
+    RelationalQueries7, RelationalQueries8, RelationalQueries9,
+    RelationalQueries10, RelationalQueries11, RelationalQueries12,
+    RelationalQueries13, RelationalQueries14, RelationalQueries15,
+    RelationalQueries16, RelationalQueries17, RelationalQueries18,
+    RelationalQueries19, RelationalQueries20, RelationalQueries21,
+    RelationalQueries22, RelationalQueries23,
+    EventQueries, EventQueries2, EventQueries3,
+    TextQueries, TextQueries2, TextQueries3, TextQueries4,
+    TextQueries5, TextQueries6, TextQueries7, TextQueries8,
+    DedupQueries, DedupQueries2, DedupQueries3, DedupQueries4,
+    DedupQueries5, DedupQueries6, DedupQueries7, DedupQueries8,
+    SimilarityQueries, SimilarityQueries2, SimilarityQueries3,
+    SimilarityQueries4, SimilarityQueries5, SimilarityQueries6,
+    SimilarityQueries7, SimilarityQueries8, SimilarityQueries9,
+    SimilarityQueries10, SimilarityQueries11,
+    ClusterQueries, PipelineQueries,
+    MultimodalQueries, MultimodalQueries2, MultimodalQueries3,
+    CorpusQueries, CorpusQueries2, CorpusQueries3, CorpusQueries4,
+    CorpusQueries5, CorpusQueries6, CorpusQueries7, CorpusQueries8,
+    CorpusQueries9, CorpusQueries10,
+    FeatureQueries, FeatureQueries2, FeatureQueries3, FeatureQueries4,
+    SketchQueries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.defs ++ RelationalQueries2.defs ++
-      RelationalQueries3.defs ++ RelationalQueries4.defs ++
-      RelationalQueries5.defs ++ RelationalQueries6.defs ++
-      RelationalQueries7.defs ++ RelationalQueries8.defs ++
-      RelationalQueries9.defs ++ RelationalQueries10.defs ++ RelationalQueries11.defs ++
-      RelationalQueries12.defs ++ RelationalQueries13.defs ++
-      RelationalQueries14.defs ++ RelationalQueries15.defs ++ RelationalQueries16.defs ++ RelationalQueries17.defs ++ RelationalQueries18.defs ++ RelationalQueries19.defs ++ RelationalQueries20.defs ++ RelationalQueries21.defs ++ RelationalQueries22.defs ++ RelationalQueries23.defs ++ EventQueries.defs ++ EventQueries2.defs ++ EventQueries3.defs ++
-      TextQueries.defs ++ TextQueries2.defs ++ TextQueries3.defs ++
-      TextQueries4.defs ++ TextQueries5.defs ++ TextQueries6.defs ++
-      TextQueries7.defs ++ TextQueries8.defs ++
-      DedupQueries.defs ++ DedupQueries2.defs ++ DedupQueries3.defs ++
-      DedupQueries4.defs ++ DedupQueries5.defs ++ DedupQueries6.defs ++
-      DedupQueries7.defs ++ DedupQueries8.defs ++
-      SimilarityQueries.defs ++ SimilarityQueries2.defs ++
-      SimilarityQueries3.defs ++ SimilarityQueries4.defs ++
-      SimilarityQueries5.defs ++ SimilarityQueries6.defs ++
-      SimilarityQueries7.defs ++ SimilarityQueries8.defs ++
-      SimilarityQueries9.defs ++ SimilarityQueries10.defs ++ SimilarityQueries11.defs ++
-      ClusterQueries.defs ++
-      PipelineQueries.defs ++ MultimodalQueries.defs ++
-      MultimodalQueries2.defs ++ MultimodalQueries3.defs ++
-      CorpusQueries.defs ++
-      CorpusQueries2.defs ++ CorpusQueries3.defs ++ CorpusQueries4.defs ++
-      CorpusQueries5.defs ++ CorpusQueries6.defs ++ CorpusQueries7.defs ++ CorpusQueries8.defs ++
-      CorpusQueries9.defs ++ CorpusQueries10.defs ++
-      FeatureQueries.defs ++ FeatureQueries2.defs ++ FeatureQueries3.defs ++
-      FeatureQueries4.defs ++
-      SketchQueries.defs
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QueryModule.merge(modules)(_.defs)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracles ++ RelationalQueries2.oracles ++
-      RelationalQueries3.oracles ++ RelationalQueries4.oracles ++
-      RelationalQueries5.oracles ++ RelationalQueries6.oracles ++
-      RelationalQueries7.oracles ++ RelationalQueries8.oracles ++
-      RelationalQueries9.oracles ++ RelationalQueries10.oracles ++ RelationalQueries11.oracles ++
-      RelationalQueries12.oracles ++ RelationalQueries13.oracles ++
-      RelationalQueries14.oracles ++ RelationalQueries15.oracles ++ RelationalQueries16.oracles ++ RelationalQueries17.oracles ++ RelationalQueries18.oracles ++ RelationalQueries19.oracles ++ RelationalQueries20.oracles ++ RelationalQueries21.oracles ++ RelationalQueries22.oracles ++ RelationalQueries23.oracles ++ EventQueries.oracles ++
-      EventQueries2.oracles ++ EventQueries3.oracles ++
-      TextQueries.oracles ++ TextQueries2.oracles ++ TextQueries3.oracles ++
-      TextQueries4.oracles ++ TextQueries5.oracles ++ TextQueries6.oracles ++
-      TextQueries7.oracles ++ TextQueries8.oracles ++
-      DedupQueries.oracles ++ DedupQueries2.oracles ++ DedupQueries3.oracles ++
-      DedupQueries4.oracles ++ DedupQueries5.oracles ++ DedupQueries6.oracles ++
-      DedupQueries7.oracles ++ DedupQueries8.oracles ++
-      SimilarityQueries.oracles ++ SimilarityQueries2.oracles ++
-      SimilarityQueries3.oracles ++ SimilarityQueries4.oracles ++
-      SimilarityQueries5.oracles ++ SimilarityQueries6.oracles ++
-      SimilarityQueries7.oracles ++ SimilarityQueries8.oracles ++
-      SimilarityQueries9.oracles ++ SimilarityQueries10.oracles ++ SimilarityQueries11.oracles ++
-      ClusterQueries.oracles ++
-      PipelineQueries.oracles ++ MultimodalQueries.oracles ++
-      MultimodalQueries2.oracles ++ MultimodalQueries3.oracles ++
-      CorpusQueries.oracles ++
-      CorpusQueries2.oracles ++ CorpusQueries3.oracles ++ CorpusQueries4.oracles ++
-      CorpusQueries5.oracles ++ CorpusQueries6.oracles ++ CorpusQueries7.oracles ++ CorpusQueries8.oracles ++
-      CorpusQueries9.oracles ++ CorpusQueries10.oracles ++
-      FeatureQueries.oracles ++ FeatureQueries2.oracles ++ FeatureQueries3.oracles ++
-      FeatureQueries4.oracles ++
-      SketchQueries.oracles
+  val oracleSql: Map[String, String] = QueryModule.merge(modules)(_.oracles)
+
+  QueryModule.requireMatched(queries.keySet, oracleSql.keySet)
 }

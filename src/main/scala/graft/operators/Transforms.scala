@@ -163,8 +163,10 @@ object Transforms {
         // rule (unique) cannot blame a row. maxViolations does not
         // apply — routing IS the policy. The dead-letter write is
         // EAGER (a gate decides before the sink runs); the flagged
-        // frame persists for its two consumers and is released by the
-        // pipeline's run sweep.
+        // frame is a lazy local checkpoint shared by its two consumers:
+        // RDD storage with no catalog-cache entry (a cached plan would
+        // serve a resubmitted run the first run's rows after a new file
+        // lands), released by the pipeline's run sweep.
         //
         // Idempotent / attributable re-runs (round 17, ADVICE r16):
         // each run writes its own `run=<id>` partition subdir. A
@@ -202,7 +204,7 @@ object Transforms {
           }
           val flagged0 = Quality.flagRows(df, rules)
             .withColumnRenamed("violated_rules", "__graft_viol")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint(eager = false)
           // default run ids salt the wall-clock stamp with a per-JVM
           // sequence (round 18, ADVICE r17): two route stages sharing
           // a deadLetterPath and starting in the same millisecond

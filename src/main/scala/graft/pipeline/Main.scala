@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point — the reference's run.sh + REST shell collapsed into
   * one command:  runMain graft.pipeline.Main <pipeline-config.yaml>
   * Parses the reference-schema YAML, submits every pipeline, reports
@@ -11,13 +9,10 @@ object Main {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: graft.pipeline.Main <pipeline-config.yaml> | --serve [port]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val spark = graft.GraftSession.builder(
+        sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+        Some(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt))
       .appName("graft-pipelines")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val mgr = new PipelineManager(spark)

@@ -40,16 +40,17 @@ object PipelineRunner {
     * Under the lock: a sweep only runs while provably alone (no
     * in-flight batch, no active stream), and neither kind of work can
     * BEGIN mid-sweep — a new batch pipeline blocks at its entry
-    * snapshot, a new stream blocks at submission. The sweep itself is
-    * rare (solo neardedup pipelines only), so serializing submissions
-    * against it costs nothing in practice.
+    * snapshot, a new stream blocks at submission. The sweep only diffs
+    * the persistent-RDD map and unpersists the blocks the finished
+    * pipeline made, so serializing submissions against it costs little.
     */
   private val sweepLock = new Object
 
   def runBatch(spark: SparkSession, spec: PipelineSpec): Unit = {
     // stages that persist internally (neardedup's signature/candidate
     // frames, connected-components checkpoints) must not outlive the
-    // pipeline on a long-running session (the REST server's JVM):
+    // pipeline on a long-running session (the REST server's JVM), and
+    // neither may the quality route stage's flagged frame:
     // un-released blocks accumulate as old-gen pressure — the Bench
     // release() lesson applied to the pipeline surface. The sweep must
     // NOT be the session-global GraftSession.release: RestServer runs
@@ -61,8 +62,8 @@ object PipelineRunner {
     // to RDDs that did not exist before this pipeline started, and
     // (b) skip it entirely unless this is the only in-flight batch
     // pipeline AND no streaming query is active — blocks skipped here
-    // are swept by the next solo neardedup pipeline's diff-free run or
-    // an explicit GraftSession.release at a known-quiet point.
+    // stay until an explicit GraftSession.release at a known-quiet
+    // point (a later pipeline's sweep sees them in its `before`).
     val sc = spark.sparkContext
     val before = sweepLock.synchronized {
       inFlightBatch.incrementAndGet()
@@ -71,12 +72,7 @@ object PipelineRunner {
     try Sinks.write(buildBatch(spark, spec), spec.sink)
     finally sweepLock.synchronized {
       val alone = inFlightBatch.decrementAndGet() == 0
-      // stages whose kernels persist internally (neardedup's signature
-      // and CC frames; semdedup's assigned-cell frame) — round 18
-      // widened from neardedup-only when the semdedup stage landed
-      if (spec.transformations.exists(t =>
-            Set("neardedup", "semdedup").contains(t.kind)) && alone &&
-          spark.streams.active.isEmpty) {
+      if (alone && spark.streams.active.isEmpty) {
         sc.getPersistentRDDs.foreach { case (id, rdd) =>
           if (!before.contains(id)) rdd.unpersist(blocking = true)
         }

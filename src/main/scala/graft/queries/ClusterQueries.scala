@@ -18,7 +18,7 @@ import graft.operators.Clustering
   * replayable: centroid sums depend on addition order). The oracle
   * unrolls both Lloyd rounds as CTE pairs (assign_j, update_j).
   */
-object ClusterQueries {
+object ClusterQueries extends QueryModule {
 
   private val K = 8
   private val Dim = 64

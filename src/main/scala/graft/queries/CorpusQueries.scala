@@ -10,7 +10,7 @@ import graft.functions.GraftFunctions._
   * and per-source corpus statistics — built from the same portable
   * primitives as the text_* queries.
   */
-object CorpusQueries {
+object CorpusQueries extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // keep documents that pass the quality gate: enough tokens, sane

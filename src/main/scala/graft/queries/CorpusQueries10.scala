@@ -41,7 +41,7 @@ import graft.Tables
   * category-bounded frames (sources, langs), a two-row union —
   * the corpus is scanned once per axis, nothing else.
   */
-object CorpusQueries10 {
+object CorpusQueries10 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "corpus_contamination_sem" -> { (s, dir) =>

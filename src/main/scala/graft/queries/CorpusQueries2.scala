@@ -10,7 +10,7 @@ import graft.Tables
   * remaining pretraining-pipeline staples. All-integer arithmetic so
   * the DuckDB oracle replays every assignment bit-for-bit.
   */
-object CorpusQueries2 {
+object CorpusQueries2 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // benchmark decontamination: flag training docs sharing 5-token

@@ -12,7 +12,7 @@ import graft.functions.GraftFunctions.token_count
   * All-integer selection logic (no RNG, no floats) so the DuckDB
   * oracle replays every decision bit-for-bit.
   */
-object CorpusQueries3 {
+object CorpusQueries3 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // mixture resampling: rebalance the corpus toward target source

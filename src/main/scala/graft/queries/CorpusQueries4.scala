@@ -7,7 +7,7 @@ import graft.Tables
 /** Fourth corpus wave (SURVEY.md §2.3, round 4): substring-level
   * (span) deduplication — [[graft.operators.SpanDedup]].
   */
-object CorpusQueries4 {
+object CorpusQueries4 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // cross-document duplicate 5-gram span removal (Lee et al. 2022

@@ -22,7 +22,7 @@ import graft.Tables
   * floor — the round-3 negative-numerator trap — so the <=W case is
   * split out as a literal 1 on both engines).
   */
-object CorpusQueries5 {
+object CorpusQueries5 extends QueryModule {
 
   /** Window (tokens per chunk) and stride (tokens between chunk
     * starts); overlap = W - S. Values chosen so sf0.01 documents

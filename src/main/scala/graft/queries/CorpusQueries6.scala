@@ -25,7 +25,7 @@ import graft.Tables
   * rightmost-tie rule (a position-level concern) cannot affect the
   * output set.
   */
-object CorpusQueries6 {
+object CorpusQueries6 extends QueryModule {
 
   private val K = 8   // winnowing k-gram length (chars)
   private val W = 16  // winnowing window (hashes)

@@ -26,7 +26,7 @@ import graft.Tables
   * corpus; everything after operates on the 5-row language frame
   * (tiny-frame windows — the downsample-then-window rule).
   */
-object CorpusQueries7 {
+object CorpusQueries7 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // `corpus_shuffle_shards` — deterministic TRAINING-ORDER shuffle +

@@ -28,7 +28,7 @@ import graft.operators.Dedup
   * same exchange); zero-token docs are excluded up front (they can
   * neither spend budget nor be ranked).
   */
-object CorpusQueries8 {
+object CorpusQueries8 extends QueryModule {
 
   // binds on this corpus: sources carry ~1300-1600 tokens at sf0.01,
   // so a 1000-token budget forces real selection (2000 selected all)

@@ -48,7 +48,7 @@ import graft.Tables
   * joins back postings-style, one per-doc rollup, and the tercile pass
   * is the RankSelect ladder — no low-cardinality window anywhere.
   */
-object CorpusQueries9 {
+object CorpusQueries9 extends QueryModule {
 
   /** One bigram row per adjacent token pair (space split, docs with
     * >= 2 tokens), with doc/lang context.

@@ -14,7 +14,7 @@ import graft.operators.Dedup
   * (pigeonhole over bands) and empirically total for MinHash/sign-LSH at
   * the corpus' planted similarity levels (verified in CI by DedupSpec).
   */
-object DedupQueries {
+object DedupQueries extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_exact" -> { (s, dir) =>

@@ -27,7 +27,7 @@ import graft.operators.Dedup
   * result broadcasts back. No window over the low-cardinality cluster
   * key anywhere (the round-3 single-task-cliff lesson).
   */
-object DedupQueries2 {
+object DedupQueries2 extends QueryModule {
 
   /** Cosine-to-centroid at or above this marks a semantic duplicate
     * (sf0.01 nearest-centroid quantiles: p50 0.19, p90 0.30 — 0.25

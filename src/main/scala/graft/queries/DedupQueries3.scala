@@ -42,7 +42,7 @@ import graft.operators.Dedup
   * stratum keeps a stable ~2000-doc pair population (26 true pairs at
   * sf0.1 m=3) at O(1) cost.
   */
-object DedupQueries3 {
+object DedupQueries3 extends QueryModule {
 
   /** The banding-ladder flag: some band's r-value signature slice
     * agrees. Identical membership to the VALUE-banded join key

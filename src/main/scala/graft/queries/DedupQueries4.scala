@@ -21,7 +21,7 @@ import graft.operators.Dedup
   * all (this is the dedup query whose SQL a reviewer can read as the
   * definition of correctness).
   */
-object DedupQueries4 {
+object DedupQueries4 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // `dedup_containment` — ASYMMETRIC overlap detection (round 8):

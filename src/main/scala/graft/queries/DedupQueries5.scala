@@ -20,7 +20,7 @@ import graft.operators.Dedup
   * then a |distinct sizes|-row histogram). Oracle replays the full
   * chain through the shared recursive-CTE closure.
   */
-object DedupQueries5 {
+object DedupQueries5 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_cluster_stats" -> { (s, dir) =>

@@ -40,7 +40,7 @@ import graft.functions.GraftFunctions._
   * / docs as ONE double division per source row. Oracle = the shared
   * recursive-closure machinery + a source rollup.
   */
-object DedupQueries6 {
+object DedupQueries6 extends QueryModule {
 
   /** The probed rows-per-band ladder (mirrors
     * Transforms.recallBandRows' codomain).

@@ -31,7 +31,7 @@ import graft.functions.GraftFunctions.cdc_chunks
   * IEEE division; chunk_bytes ≥ 1 because empty texts are filtered
   * on both engines (a zero-length doc has no chunks by definition).
   */
-object DedupQueries7 {
+object DedupQueries7 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_cdc" -> { (s, dir) =>

@@ -45,7 +45,7 @@ import graft.operators.Dedup
   * the estimate margin makes the two candidate sets decision-
   * equivalent, the dedup_minhash capture-probability argument.
   */
-object DedupQueries8 {
+object DedupQueries8 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_incremental" -> { (s, dir) =>

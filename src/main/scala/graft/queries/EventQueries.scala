@@ -14,7 +14,7 @@ import graft.operators.{AsOfJoin, RangeJoin}
   * same way — so oracle parity is exact. Raw timestamps are never emitted
   * (us-vs-ns output precision would differ).
   */
-object EventQueries {
+object EventQueries extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q15_asof_join" -> { (s, dir) =>

@@ -27,7 +27,7 @@ import graft.Tables
   * rollup — the conditional recent-count lives in the same pass, no
   * second scan. All integer micros.
   */
-object EventQueries2 {
+object EventQueries2 extends QueryModule {
 
   private val Week: Long = 7L * 24 * 3600 * 1000000L
 

@@ -22,7 +22,7 @@ import graft.Tables
   * single-group rank ladder with the real group-count cap — no global
   * window sort.
   */
-object EventQueries3 {
+object EventQueries3 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q115_time_to_convert" -> { (s, dir) =>

@@ -23,7 +23,7 @@ import graft.Tables
   * ~9e16 at sf1 is the first scale where a two-pass centered moment
   * would be needed instead.
   */
-object FeatureQueries {
+object FeatureQueries extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // z-score standardization of l_quantity within each returnflag

@@ -10,7 +10,7 @@ import graft.functions.GraftFunctions.poly_hash
   * float discipline as [[FeatureQueries]]: exact integer/decimal
   * statistics, identical double expression trees on both sides.
   */
-object FeatureQueries2 {
+object FeatureQueries2 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // robust scaling: (x - median) / IQR — outlier-insensitive

@@ -27,7 +27,7 @@ import graft.Tables
   * whole-stage codegen'd built-in higher-order functions, output
   * 4× smaller than the input it replaces.
   */
-object FeatureQueries3 {
+object FeatureQueries3 extends QueryModule {
 
   private val P = 1073741789L
   private val As = Seq(1000003L, 1000033L, 1000037L, 1000039L,

@@ -29,7 +29,7 @@ import graft.Tables
   * revenue join shuffles once on the customer key; bucket assignment
   * is a broadcast of 9 cut values.
   */
-object FeatureQueries4 {
+object FeatureQueries4 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "feat_target_encode_cv" -> { (s, dir) =>

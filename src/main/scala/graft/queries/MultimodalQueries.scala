@@ -8,7 +8,7 @@ import graft.multimodal.Multimodal
   * table -> partition-wise feature extraction (stub decoder). The oracle
   * replays the byte histogram in SQL (ASCII corpus: byte == codepoint).
   */
-object MultimodalQueries {
+object MultimodalQueries extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mm_extract" -> { (s, dir) =>

@@ -28,7 +28,7 @@ import graft.multimodal.Multimodal
   * otherwise run it twice), bucket join on (band, value), verify only
   * survivors.
   */
-object MultimodalQueries2 {
+object MultimodalQueries2 extends QueryModule {
 
   private val HD = "0123456789abcdef"
 

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * the oracle replays the full chain with a distinct² pair matrix
   * (fine at oracle scale; the engine-side join is the banded one).
   */
-object MultimodalQueries3 {
+object MultimodalQueries3 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mm_hamming_curve" -> { (s, dir) =>

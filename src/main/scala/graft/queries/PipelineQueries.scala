@@ -8,7 +8,7 @@ import graft.pipeline.{PipelineRunner, PipelineSpec, SourceSpec, SinkSpec, Trans
   * same code path a YAML-configured job takes (reference pipelines:
   * csv-to-parquet's filter, text-to-text's map, columnMapping).
   */
-object PipelineQueries {
+object PipelineQueries extends QueryModule {
 
   private val noSink = SinkSpec("file", Map("path" -> "/tmp/graft-unused"))
 

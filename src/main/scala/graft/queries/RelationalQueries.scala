@@ -14,7 +14,7 @@ import graft.Tables
   * Spark and DuckDB. Counts and sums of integral-valued doubles are
   * already exact.
   */
-object RelationalQueries {
+object RelationalQueries extends QueryModule {
 
   /** Exact 2-dec money: double -> decimal(15,2) (values are 2-dec by construction). */
   private def money(c: Column): Column = c.cast(DecimalType(15, 2))

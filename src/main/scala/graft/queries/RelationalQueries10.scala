@@ -7,7 +7,7 @@ import graft.Tables
 /** Tenth relational wave (SURVEY.md §2.2, round 4): event-sequence
   * transition analysis and the modern conditional-aggregate family.
   */
-object RelationalQueries10 {
+object RelationalQueries10 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Markov transition matrix over user event sequences: P(next event

@@ -33,7 +33,7 @@ import graft.Tables
   * No driver-side graph, no windows. 3 iterations is the fixed-depth
   * contract (the latency knob on cyclic plans — see q70's scaladoc).
   */
-object RelationalQueries11 {
+object RelationalQueries11 extends QueryModule {
 
   /** One k-core peel round: recompute degrees, keep nodes with deg >= k,
     * semi-join the edge list down to surviving endpoints.

@@ -32,7 +32,7 @@ import graft.Tables
   * integer epoch-micros on both engines (never raw timestamps — the
   * round-1 precision rule).
   */
-object RelationalQueries12 {
+object RelationalQueries12 extends QueryModule {
 
   private val Rounds = 3
 

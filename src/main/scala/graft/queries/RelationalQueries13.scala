@@ -42,7 +42,7 @@ import graft.operators.{Quality, RangeJoin}
   * FK check a 100 TB ingest gate runs, joined with the single-pass
   * rule audit corpus_audit already exercises.
   */
-object RelationalQueries13 {
+object RelationalQueries13 extends QueryModule {
 
   /** Morton interleave of two `bits`-bit columns: bit i of `a` lands at
     * 2i, bit i of `b` at 2i+1. Built-in shifts only — codegen'd.

@@ -43,7 +43,7 @@ import graft.Tables
   * of exact integer products (supp·N < 2^63 — the asserted-invariant
   * bound); ranking and ties are integer-first (supp desc, item ids).
   */
-object RelationalQueries14 {
+object RelationalQueries14 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q101_cusum" -> { (s, dir) =>

@@ -31,7 +31,7 @@ import graft.Tables
   * grid). Tie on the argmax resolves to the smallest value via
   * lexicographic struct max with negated value.
   */
-object RelationalQueries15 {
+object RelationalQueries15 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // `dq_benford` — Benford first-digit audit (round 8, the classic

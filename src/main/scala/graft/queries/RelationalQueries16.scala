@@ -30,7 +30,7 @@ import graft.Tables
   * the ladder fallback instead of silently serializing a fact-sized
   * sort onto one core.
   */
-object RelationalQueries16 {
+object RelationalQueries16 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q116_rfm" -> { (s, dir) =>

@@ -59,7 +59,7 @@ import graft.Tables
   * text_zipf_audit discipline). Tie-break (support desc, e1, e2, e3)
   * makes the limit a total order, so the top-20 set is deterministic.
   */
-object RelationalQueries17 {
+object RelationalQueries17 extends QueryModule {
 
   /** Power-iteration depth (fixed-depth contract, the q90/q70 knob). */
   private val StatRounds = 8

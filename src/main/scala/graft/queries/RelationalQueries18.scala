@@ -34,7 +34,7 @@ import graft.Tables
   * Scale: one groupBy to days, one tiny-frame aggregate — nothing
   * else touches the fact table.
   */
-object RelationalQueries18 {
+object RelationalQueries18 extends QueryModule {
 
   /** Per-row exact cents from the double price column (the money
     * discipline: decimal cast BEFORE any arithmetic, cents as long).

@@ -38,7 +38,7 @@ import graft.Tables
   * ~64·#days rows at ANY corpus size — the fact table is touched
   * once, by q125's daily rollup.
   */
-object RelationalQueries19 {
+object RelationalQueries19 extends QueryModule {
 
   private def centsCol = (col("o_totalprice").cast("decimal(15,2)") * 100)
     .cast("long")

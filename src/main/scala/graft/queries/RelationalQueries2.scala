@@ -11,7 +11,7 @@ import graft.operators.Skew
   * aggregation, scalar subquery. Same parity discipline as
   * RelationalQueries.
   */
-object RelationalQueries2 {
+object RelationalQueries2 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // salted join must be row-identical to the plain join (the oracle)

@@ -36,7 +36,7 @@ import graft.Tables
   * Scale: one fact-table rollup to days; the 8 folds run on the
   * collected ≤days array (the q122 shape).
   */
-object RelationalQueries20 {
+object RelationalQueries20 extends QueryModule {
 
   private def centsCol = (col("o_totalprice").cast("decimal(15,2)") * 100)
     .cast("long")

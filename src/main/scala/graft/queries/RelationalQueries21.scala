@@ -39,7 +39,7 @@ import graft.Tables
   * groupBy at all: the single-row aggregate partial-combines
   * map-side and the plan never shuffles more than 8 numbers.
   */
-object RelationalQueries21 {
+object RelationalQueries21 extends QueryModule {
 
   private def centsCol = (col("o_totalprice").cast("decimal(15,2)") * 100)
     .cast("long")

@@ -70,7 +70,7 @@ import graft.Tables
   * (replication shifts order keys only), so scale probes measure
   * the edge-build scan, as for q126.
   */
-object RelationalQueries22 {
+object RelationalQueries22 extends QueryModule {
 
   /** The walk depth AND the pair-distance horizon — one constant, so
     * raising the depth widens the horizon consistently (the contract

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * replication (the graph-family fact), so this rides the artifact
   * for free.
   */
-object RelationalQueries23 {
+object RelationalQueries23 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q136_assortativity" -> { (s, dir) =>

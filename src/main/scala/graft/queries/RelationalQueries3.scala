@@ -8,7 +8,7 @@ import graft.Tables
 /** Third relational wave (SURVEY.md §2.2): RANGE window frames,
   * GROUPING SETS, ordered array aggregation, JSON extraction.
   */
-object RelationalQueries3 {
+object RelationalQueries3 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // value-range window frame: orders within a 10k price band below

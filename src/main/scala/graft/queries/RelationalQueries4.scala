@@ -9,7 +9,7 @@ import graft.Tables
   * rank-family window functions. Total orderings everywhere so results
   * are deterministic.
   */
-object RelationalQueries4 {
+object RelationalQueries4 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q35_pagination" -> { (s, dir) =>

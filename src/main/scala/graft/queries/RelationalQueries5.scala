@@ -11,7 +11,7 @@ import graft.functions.GraftFunctions._
   * extraction, multi-distinct aggregation. Total orderings / integer
   * arithmetic throughout so results hash-match the DuckDB oracle.
   */
-object RelationalQueries5 {
+object RelationalQueries5 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q38_intersect" -> { (s, dir) =>

@@ -9,7 +9,7 @@ import graft.Tables
   * UNPIVOT, null-handling surface, LATERAL subqueries. Exact decimal
   * arithmetic wherever money is averaged so parity is bit-exact.
   */
-object RelationalQueries6 {
+object RelationalQueries6 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // sliding window: 4-row trailing sum per customer (exact decimal,

@@ -13,7 +13,7 @@ import graft.Tables
   * DATE/`unix_micros` (never raw timestamps), explicit tie-breaks in
   * every window order.
   */
-object RelationalQueries7 {
+object RelationalQueries7 extends QueryModule {
 
   private val epoch = to_date(lit("1970-01-01"))
 

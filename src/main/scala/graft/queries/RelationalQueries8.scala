@@ -8,7 +8,7 @@ import graft.Tables
   * ingestion path, blocking-based entity resolution, incremental
   * aggregation maintenance, and the portable-SQL entry point.
   */
-object RelationalQueries8 {
+object RelationalQueries8 extends QueryModule {
 
   /** ONE ANSI-portable SQL string that is simultaneously the Spark
     * query (via spark.sql over registered views) and the DuckDB oracle

@@ -10,7 +10,7 @@ import graft.Tables
   * EWMA folds, interval-overlap arithmetic, array set operations, and
   * the 2-D Pareto frontier ([[graft.operators.Skyline]]).
   */
-object RelationalQueries9 {
+object RelationalQueries9 extends QueryModule {
 
   /** Recursive traversal over a functional edge set derived from
     * nation; Spark 4.1 plans WITH RECURSIVE natively (UnionLoopExec) —

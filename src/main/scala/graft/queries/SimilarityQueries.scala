@@ -11,7 +11,7 @@ import graft.operators.Similarity
   * exactly). Cosines are bit-identical between engines (strict left
   * folds over identical doubles), so top-k ordering matches exactly.
   */
-object SimilarityQueries {
+object SimilarityQueries extends QueryModule {
 
   private def queryDf(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings").filter(col("vec_id") === 0)

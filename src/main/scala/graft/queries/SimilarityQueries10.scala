@@ -52,7 +52,7 @@ import graft.operators.Clustering
   * beam loop (variant-keyed edges — the r13 tagged-loop discipline),
   * so the iterative rounds' scheduling latency is paid once.
   */
-object SimilarityQueries10 {
+object SimilarityQueries10 extends QueryModule {
 
   import SimilarityQueries6.{NAnchors, Beam, Steps, Degree}
 

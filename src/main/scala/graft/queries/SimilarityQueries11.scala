@@ -58,7 +58,7 @@ import org.apache.spark.sql.functions._
   * reciprocity is a self-join on the degree-bounded edge frame keyed
   * (dst, src). Nothing here scales past O(|edges|).
   */
-object SimilarityQueries11 {
+object SimilarityQueries11 extends QueryModule {
 
   import SimilarityQueries6.{NAnchors, buildGraph}
 

@@ -12,7 +12,7 @@ import graft.operators.Similarity
   * bit-identical across engines, so thresholds and vote rankings are
   * exact.
   */
-object SimilarityQueries2 {
+object SimilarityQueries2 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // radius query: everything within cosine >= 0.2 of vector 0 — a

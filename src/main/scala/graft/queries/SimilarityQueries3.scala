@@ -25,7 +25,7 @@ import graft.functions.GraftFunctions.cosine_sim
   * shape — `coalesce(1.0/(60+rv), 0.0) + coalesce(1.0/(60+rl), 0.0)`
   * — so DuckDB reproduces every double bit-for-bit.
   */
-object SimilarityQueries3 {
+object SimilarityQueries3 extends QueryModule {
 
   private val Depth = 100 // per-retriever shortlist depth
   private val K0 = 60     // standard RRF dampening constant

@@ -23,7 +23,7 @@ import graft.functions.GraftFunctions.cosine_sim
   * WindowGroupLimit prunes each to k·partitions rows pre-shuffle),
   * and the hit join runs on ≤ anchors·40 rows.
   */
-object SimilarityQueries4 {
+object SimilarityQueries4 extends QueryModule {
 
   private val NAnchors = 5
   private val ShortlistK = 40

@@ -29,7 +29,7 @@ import graft.functions.GraftFunctions.cosine_sim
   * construction. The production search path this curve tunes is
   * ann_ivf/ann_ivfpq, which never brute-forces.
   */
-object SimilarityQueries5 {
+object SimilarityQueries5 extends QueryModule {
 
   private val NAnchors = 5
   private val TopK = 10

@@ -47,7 +47,7 @@ import graft.functions.GraftFunctions.cosine_sim
   * rationals into one IEEE division; degenerate anchors (no positives
   * or no negatives) emit null rather than tripping ANSI division.
   */
-object SimilarityQueries6 {
+object SimilarityQueries6 extends QueryModule {
 
   private[queries] val NAnchors = 5
   // probed at sf0.01: convergence by step 4; 6 keeps margin without

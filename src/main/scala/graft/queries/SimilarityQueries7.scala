@@ -43,7 +43,7 @@ import graft.operators.Clustering
   * WindowGroupLimit), and the exact side is anchors-bounded (5 rows
   * broadcast).
   */
-object SimilarityQueries7 {
+object SimilarityQueries7 extends QueryModule {
 
   private val M = 8 // subspaces
   private val SubDim = 8 // dims per subspace (64 / M)

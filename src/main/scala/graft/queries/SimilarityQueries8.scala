@@ -28,7 +28,7 @@ import graft.functions.GraftFunctions.cosine_sim
   * |anchors| ≫ partition-count scales via more anchors, and hits
   * aggregate by left-semi join — no driver loops, no full sorts.
   */
-object SimilarityQueries8 {
+object SimilarityQueries8 extends QueryModule {
 
   private val Dims = Seq(8, 16, 32, 64)
   private val NAnchors = 5

@@ -40,7 +40,7 @@ import graft.functions.GraftFunctions.cosine_sim
   * ann_graph_search loop; localCheckpoint per iterated step (the
   * beam-frontier double-consume discipline).
   */
-object SimilarityQueries9 {
+object SimilarityQueries9 extends QueryModule {
 
   import SimilarityQueries6.{NAnchors, Beam, Degree, cos, walkCtes}
 

@@ -19,7 +19,7 @@ import graft.functions.GraftFunctions._
   * plans degrade gracefully to the sketches' published error bounds
   * without any change in shape.
   */
-object SketchQueries {
+object SketchQueries extends QueryModule {
 
   private val kllRanks = Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
 

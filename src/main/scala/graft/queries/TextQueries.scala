@@ -10,7 +10,7 @@ import graft.functions.GraftFunctions._
   * identical regex classes, integer polynomial hashes) so the DuckDB
   * oracle reproduces results exactly — including the fingerprints.
   */
-object TextQueries {
+object TextQueries extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_tokens" -> { (s, dir) =>

@@ -11,7 +11,7 @@ import graft.functions.GraftFunctions._
   * HOFs, shared regex classes, integer arithmetic, double division as
   * the final step) so the DuckDB oracle reproduces results exactly.
   */
-object TextQueries2 {
+object TextQueries2 extends QueryModule {
 
   /** Regexes shared verbatim with the oracle (lowercase classes only,
     * RE2-safe syntax — identical semantics in Java regex and DuckDB).

@@ -10,7 +10,7 @@ import graft.Tables
   * "does this doc read like the corpus"). All counts stay BIGINT; the
   * single ratio is derived at the end, so parity is exact.
   */
-object TextQueries3 {
+object TextQueries3 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // per-doc bigram familiarity: mean corpus frequency of the doc's

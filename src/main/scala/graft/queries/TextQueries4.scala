@@ -23,7 +23,7 @@ import graft.Tables
   * hash shuffle on the high-cardinality key; survivor = min doc_id
   * (the dedup_exact convention).
   */
-object TextQueries4 {
+object TextQueries4 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_readability" -> { (s, dir) =>

@@ -26,7 +26,7 @@ import graft.Tables
   * parallelism — zero shuffles; at 100 TB this is a pure map over
   * the corpus, exactly what a gate pass should be.
   */
-object TextQueries5 {
+object TextQueries5 extends QueryModule {
 
   private val stopList =
     graft.functions.GraftFunctions.stopwords.map(w => s"'$w'").mkString(", ")

@@ -51,7 +51,7 @@ import graft.functions.GraftFunctions.poly_hash
   * At 100 TB: training is one map + a 1024-key aggregate, scoring is
   * a map over the corpus — the exact shape a gate pass should be.
   */
-object TextQueries6 {
+object TextQueries6 extends QueryModule {
 
   /** Hashing-trick bucket count (fastText-style; 2^10 keeps the weight
     * table broadcast-trivial while exceeding this corpus' vocabulary).

@@ -31,7 +31,7 @@ import graft.Tables
   * parallelism (weights via the session model cache); the ladder is
   * one range exchange; the rollup has 10 groups with map-side partials.
   */
-object TextQueries7 {
+object TextQueries7 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // `text_chi2_features` — χ² FEATURE SELECTION (round 12): the top-20

@@ -26,7 +26,7 @@ import graft.Tables
   * the two small frames. The growth ratio vocab_k / vocab_{k-1} is
   * one IEEE division on a ≤40-row frame.
   */
-object TextQueries8 {
+object TextQueries8 extends QueryModule {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_heaps" -> { (s, dir) =>

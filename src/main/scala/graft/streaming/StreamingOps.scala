@@ -1211,11 +1211,11 @@ object StreamingOps {
     *
     * Reading the outputs: `spark.read.parquet(s"$outDir/data")` /
     * `(deadLetterPath)` — the `batch` partition column is the
-    * provenance audit trail. The micro-batch is scanned three times
-    * (rejects, clean, audit delta) — bounded by the trigger, and
-    * deliberately NOT persisted: a versionedStateSink fold must not
-    * persist internals (the round-12 leak lesson — the state write
-    * runs after the fold returns).
+    * provenance audit trail. The micro-batch is scanned once: the
+    * flagged batch persists for its three readers (rejects, clean,
+    * audit delta) and is unpersisted before the fold returns. The
+    * state write runs after that (the round-12 leak lesson), so the
+    * one-row audit delta is collected into a local frame first.
     */
   def qualityRoutedMaintained(stream: DataFrame,
       rules: Seq[graft.operators.Quality.Rule], outDir: String,
@@ -1242,12 +1242,17 @@ object StreamingOps {
           }
         }
         val flagged = graft.operators.Quality.flagRows(batch.toDF(), rules)
-        writeOnce(flagged.filter(size(col("violated_rules")) > 0),
-          deadLetterPath)
-        writeOnce(flagged.filter(size(col("violated_rules")) === 0)
-          .drop("violated_rules"), s"$outDir/data")
-        bumpFoldCounter(name, "batches_routed", 1L)
-        val delta = graft.operators.Quality.audit(batch.toDF(), rules)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val delta = try {
+          writeOnce(flagged.filter(size(col("violated_rules")) > 0),
+            deadLetterPath)
+          writeOnce(flagged.filter(size(col("violated_rules")) === 0)
+            .drop("violated_rules"), s"$outDir/data")
+          bumpFoldCounter(name, "batches_routed", 1L)
+          val audit = graft.operators.Quality.audit(flagged, rules)
+          spark.createDataFrame(
+            java.util.Arrays.asList(audit.collect(): _*), audit.schema)
+        } finally flagged.unpersist(blocking = true)
         prev.fold(delta) { p =>
           val cols = "n_rows" +: rules.map(_.name)
           p.unionByName(delta)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness: replicate the sf0.1 tables 10x (ids offset per copy,
@@ -16,10 +15,8 @@ object ScaleProbe {
     // 100x probe; the SCALE10 output tag is kept for log-diff stability)
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/scale10")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder(
+        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", Some(64))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

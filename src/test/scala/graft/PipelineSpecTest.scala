@@ -408,6 +408,37 @@ class PipelineSpecTest extends SparkSpec {
     GraftSession.release(spark)
   }
 
+  test("a resubmitted route pipeline sees a newly landed file and leaves no blocks") {
+    val in = tmp()
+    val out = tmp() + "/clean"
+    val dlq = tmp() + "/dead"
+    def land(file: String, ids: Range): Unit = Files.writeString(
+      java.nio.file.Paths.get(s"$in/$file"),
+      ids.map(i => s"$i,${if (i % 10 == 0) "" else s"k$i"}")
+        .mkString("id,k\n", "\n", "\n"))
+    val spec = PipelineSpec(
+      name = "route-resubmit",
+      source = SourceSpec("file", Map("path" -> in, "format" -> "csv",
+        "header" -> "true", "schemaDdl" -> "id LONG, k STRING")),
+      transformations = Seq(TransformSpec("quality", Map(
+        "rules" -> Seq(Map("kind" -> "not_null", "column" -> "k")),
+        "onViolation" -> "route", "deadLetterPath" -> dlq))),
+      sink = SinkSpec("file", Map("path" -> out, "format" -> "parquet")))
+    val mgr = new PipelineManager(spark)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    land("a.csv", 0 until 1000)
+    assert(mgr.submit(spec) == mgr.Completed)
+    assert(spark.read.parquet(out).count() == 900)
+    assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore)
+    land("b.csv", 1000 until 2000)
+    assert(mgr.submit(spec) == mgr.Completed)
+    assert(spark.read.parquet(out).count() == 1800,
+      "the resubmitted run must read the newly landed file")
+    assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore,
+      "the route stage's flagged frame must not outlive its pipeline")
+    GraftSession.release(spark)
+  }
+
   test("manager count/isRunning/stopAll mirror the controller surface") {
     val in = tmp()
     Files.writeString(java.nio.file.Paths.get(s"$in/x.txt"), "a\nb\n")

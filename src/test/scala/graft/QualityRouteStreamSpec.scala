@@ -73,6 +73,23 @@ class QualityRouteStreamSpec extends SparkSpec {
     GraftSession.release(spark)
   }
 
+  test("each micro-batch is scanned once: numInputRows equals the file's rows") {
+    val dir = tmp("graft_qscan")
+    spark.range(2000).select(col("id").as("doc_id"),
+        when(col("id") % 7 === 0, lit(null)).otherwise(lit("t")).as("text"),
+        (col("id") % 600).as("n_chars"))
+      .coalesce(1).write.parquet(s"$dir/in/b0")
+    val stream = spark.readStream.schema("doc_id LONG, text STRING, n_chars LONG")
+      .parquet(s"$dir/in/*")
+    val q = StreamingOps.qualityRoutedMaintained(
+      stream, rules, s"$dir/out", s"$dir/dlq", "q_scan_once_spec")
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.map(_.numInputRows).sum == 2000L)
+    assert(spark.read.parquet(s"$dir/out/data").count() +
+      spark.read.parquet(s"$dir/dlq").count() == 2000L)
+    GraftSession.release(spark)
+  }
+
   test("a pre-existing batch dir is a replay marker — the side write skips, never duplicates") {
     import spark.implicits._
     val dir = tmp("graft_qreplay")

@@ -5,11 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per suite, lazily created). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
 }
