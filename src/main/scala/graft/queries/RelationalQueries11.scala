@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.GraphRounds.{Keep, loop, side, undirected}
 
 /** Graph centrality (SURVEY.md §2.1, round 6): PageRank over the
   * customer↔supplier interaction graph (an edge per distinct
@@ -35,54 +36,66 @@ import graft.Tables
   */
 object RelationalQueries11 extends QueryModule {
 
-  /** One k-core peel round: recompute degrees, keep nodes with deg >= k,
-    * semi-join the edge list down to surviving endpoints.
-    *
-    * `broadcastSurvivors = true` is the measured-fast form at bench scale
-    * (the |V|-bounded survivor set is ≤20k longs ≪ |E|; broadcast semi
-    * joins preserve the edge frame's src partitioning so no round
-    * re-exchanges it). At node counts past the broadcast limit the same
-    * round runs with SHUFFLE_HASH survivor sides instead — semantically
-    * identical (KCoreFallbackSpec proves survivor-set equality), ~3×
-    * slower per round at sf0.1 because the edge frame re-exchanges.
+  /** q92's 4-round k-core peel of an edge frame (both orientations
+    * present): each round recomputes degrees, keeps nodes with
+    * deg >= k, and semi-joins the edges down to surviving endpoints.
+    * The |V|-bounded survivor set (≤20k longs ≪ |E|) is a round side
+    * ([[graft.operators.GraphRounds.side]]): broadcast, the semi joins
+    * preserve the edge frame's src partitioning so no round
+    * re-exchanges it; with broadcasting off the same round re-exchanges
+    * the edges, ~3× slower per round at sf0.1. Survivors persist (two
+    * sides read them) but are NOT checkpointed: a persist costs no plan
+    * compile. Constraint propagation is off while the rounds build
+    * (checkpointed constraints go stale — the Dedup CC loop rule).
+    * Returns the surviving edges.
     */
-  def kcorePeelRound(e: DataFrame, k: Int,
-      broadcastSurvivors: Boolean): DataFrame = {
-    import e.sparkSession.implicits._
-    val keep = e.groupBy($"src").agg(count(lit(1)).as("deg"))
-      .filter($"deg" >= k).select($"src".as("node")).persist()
-    def side(c: String) = {
-      val s = keep.select($"node".as(c))
-      if (broadcastSurvivors) broadcast(s) else s.hint("SHUFFLE_HASH")
-    }
-    e.join(side("src"), Seq("src"), "left_semi")
-      .join(side("dst"), Seq("dst"), "left_semi")
+  def kcore(edges: DataFrame, k: Int): DataFrame = {
+    val s = edges.sparkSession
+    import s.implicits._
+    val cpKey = "spark.sql.constraintPropagation.enabled"
+    val cpPrev = s.conf.get(cpKey)
+    s.conf.set(cpKey, "false")
+    try {
+      val e0 = edges.repartition($"src").localCheckpoint(eager = false)
+      loop(e0, 4, Keep.TruncateEveryOther) { (e, _) =>
+        val keep = e.groupBy($"src").agg(count(lit(1)).as("deg"))
+          .filter($"deg" >= k).select($"src".as("node")).persist()
+        def survivors(c: String) = side(keep.select($"node".as(c)))
+        e.join(survivors("src"), Seq("src"), "left_semi")
+          .join(survivors("dst"), Seq("dst"), "left_semi")
+      }.last
+    } finally s.conf.set(cpKey, cpPrev)
   }
 
-  /** One pagerank contribution round over a dst-partitioned persisted
-    * edge frame. `broadcastRanks = true` is the measured-fast form at
-    * bench scale (the |V|-bounded rank/contrib frames broadcast, the
-    * round is exchange-free on the edge side); past the broadcast
-    * budget the SAME round runs with SHUFFLE_HASH sides instead —
-    * semantically identical (GraphRoundFallbackSpec proves output
-    * equality under autoBroadcastJoinThreshold=-1, the kcorePeelRound
-    * discipline), the edge frame re-exchanges per round. The flip is
-    * the caller's parameter, not an automatic threshold check.
+  /** q90's 3 PageRank rounds over a one-orientation pair frame:
+    * (node, deg, rank) for every node. The edge list is persisted
+    * partitioned on DST (the q93 shape): each round takes the
+    * |V|-bounded rank frame as a round side
+    * ([[graft.operators.GraphRounds.side]]; broadcast preserves the dst
+    * partitioning), so the round's dst-keyed contribution sum runs
+    * exchange-free against the cached layout at runtime (AQE re-checks
+    * requirements per stage once the cache materializes) — no per-round
+    * exchange of the edge list at all. The round-6 SHUFFLE_HASH form
+    * (src-partitioned edges, shuffled node sides) measured 2.5s at
+    * sf0.1; this one 1.85s.
     */
-  def pagerankRound(edges: DataFrame, nd: DataFrame, rank: DataFrame,
-      broadcastRanks: Boolean): DataFrame = {
-    import edges.sparkSession.implicits._
-    def side(df: DataFrame) =
-      if (broadcastRanks) broadcast(df) else df.hint("SHUFFLE_HASH")
-    val contrib = edges
-      .join(side(rank.select($"node".as("src"), expr("rank div deg").as("c"))),
-        "src")
-      .groupBy($"dst").agg(sum($"c").as("s"))
-    nd.join(side(contrib.withColumnRenamed("dst", "node")),
-        Seq("node"), "left")
-      .select($"node", $"deg",
-        (lit(150000L) +
+  def pagerank(pairs: DataFrame): DataFrame = {
+    val edges = undirected(pairs, "dst").persist()
+    val nd = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .select(col("src").as("node"), col("deg"))
+      .persist() // one row per node; the join-back target each round
+    val r0 = nd.select(col("node"), col("deg"), lit(1000000L).as("rank"))
+    // the join back onto nd takes the |V|-bounded contributions as a
+    // round side too
+    (1 to 3).foldLeft(r0) { (rank, _) =>
+      val contrib = edges.join(side(rank.select(col("node").as("src"),
+          expr("rank div deg").as("c"))), "src")
+        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+      nd.join(side(contrib.withColumnRenamed("dst", "node")),
+          Seq("node"), "left")
+        .select(col("node"), col("deg"), (lit(150000L) +
           expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("rank"))
+    }
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -91,31 +104,7 @@ object RelationalQueries11 extends QueryModule {
       // node ids: customers on even, suppliers on odd — one BIGINT
       // namespace, no string tags to shuffle; the distinct-pair scan
       // is the shared GraphEdges.cotradePairs artifact (round 19)
-      val cs = GraphEdges.cotradePairs(s, dir).select($"src", $"dst")
-      // partition the persisted edge list on DST (the q93 shape):
-      // the per-round join consumes the |V|-bounded rank frame as a
-      // BROADCAST (preserving the dst partitioning), so the round's
-      // dst-keyed contribution sum runs exchange-free against the
-      // cached layout at runtime (AQE re-checks requirements per stage
-      // once the cache materializes) — no per-round exchange of the
-      // edge list at all. The round-6 SHUFFLE_HASH form (src-
-      // partitioned edges, shuffled node sides) measured 2.5s at
-      // sf0.1; this one 1.85s. Past broadcast limits (|V| beyond the
-      // driver budget) the caller flips pagerankRound's broadcastRanks
-      // parameter to get SHUFFLE_HASH sides — a manual knob exactly
-      // like kcorePeelRound's, proven by GraphRoundFallbackSpec.
-      val edges = cs.union(cs.select($"dst".as("src"), $"src".as("dst")))
-        .repartition($"dst")
-        .persist()
-      val nd = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-        .select($"src".as("node"), $"deg")
-        .persist() // one row per node; the join-back target each round
-
-      val r0 = nd.select($"node", $"deg", lit(1000000L).as("rank"))
-      val rFinal = (1 to 3).foldLeft(r0) { (rank, _) =>
-        pagerankRound(edges, nd, rank, broadcastRanks = true)
-      }
-      rFinal
+      pagerank(GraphEdges.cotradePairs(s, dir).select($"src", $"dst"))
         .select($"node", ($"node" % 2).as("ntype"), $"rank")
         .orderBy($"rank".desc, $"node".asc).limit(50)
     },
@@ -127,38 +116,34 @@ object RelationalQueries11 extends QueryModule {
     // BIGINT micro-units (non-negative truncating div == DuckDB //),
     // and each round's `min` is order-independent, so the distance
     // frontier is bit-exact replayable. Scale shape mirrors q90: the
-    // edge relation is built once, pre-partitioned on src and
-    // persisted; a round is one equi-join against the co-partitioned
-    // edges + one partial-aggregated min-groupBy — the frontier frame
-    // never exceeds |V| rows, and 4 rounds is the fixed-depth
-    // contract (BFS diameter knob, same as q70/q90).
+    // edge relation is built once, partitioned on DST (the min's
+    // grouping key) and persisted; a round joins the |V|-bounded
+    // frontier as a GraphRounds.side + one partial-aggregated
+    // min-groupBy — the frontier frame never exceeds |V| rows, and 4
+    // rounds is the fixed-depth contract (BFS diameter knob, same as
+    // q70/q90). Broadcasting the frontier against src-partitioned
+    // edges ran 19 Spark jobs a pass at sf0.1 against 16 for the old
+    // SHUFFLE_HASH form; dst partitioning brings it back to 16.
     //
     // Unlike q90, each round consumes the previous frontier TWICE
     // (the keep-current union branch and the relax-join branch) — a
-    // Bellman-Ford structural fact, not a plan choice. Left lazy,
-    // that doubling compounds to 2^rounds recomputations of the
-    // whole prefix (measured 5.95s at sf0.1); persisting each
-    // round's |V|-bounded frontier makes both branches read one
-    // materialization (1.5s). Bench/Verify's release() sweep drops
-    // the round frames after the action.
+    // Bellman-Ford structural fact, not a plan choice: the loop keeps
+    // each frontier persisted (GraphRounds.Keep.ReadTwice).
     "q91_shortest_path" -> { (s, dir) =>
       import s.implicits._
       // shared co-trade scan (round 19); the weight derives from the
       // artifact's exact trade count
       val cs = GraphEdges.cotradePairs(s, dir)
         .select($"src", $"dst", expr("1000000 div (cnt + 1)").as("w"))
-      val edges = cs.union(cs.select($"dst".as("src"), $"src".as("dst"), $"w"))
-        .repartition($"src")
-        .persist()
+      val edges = undirected(cs, "dst").persist()
       val d0 = Seq((2L, 0L)).toDF("node", "dist")
-      val dFinal = (1 to 4).foldLeft(d0) { (dist, _) =>
-        val d = dist.persist()
+      val dFinal = loop(d0, 4, Keep.ReadTwice) { (d, _) =>
         val relaxed = edges
-          .join(d.select($"node".as("src"), $"dist").hint("SHUFFLE_HASH"), "src")
+          .join(side(d.select($"node".as("src"), $"dist")), "src")
           .select($"dst".as("node"), ($"dist" + $"w").as("dist"))
         d.union(relaxed)
           .groupBy($"node").agg(min($"dist").as("dist"))
-      }
+      }.last
       dFinal
         .select($"node", ($"node" % 2).as("ntype"), $"dist")
         .orderBy($"dist".asc, $"node".asc).limit(100)
@@ -179,50 +164,26 @@ object RelationalQueries11 extends QueryModule {
     //    an EXCHANGE-FREE (src,dst) dedup — hash partitioning on src
     //    alone satisfies clustering on (src,dst);
     //  - a round = one degree partial-agg + two LEFT SEMI joins against
-    //    the |V|-bounded survivor set (≤20k longs ≪ |E|), which
-    //    BROADCASTS — broadcast joins preserve the src partitioning so
-    //    no round ever re-exchanges the edge frame (the SHUFFLE_HASH
-    //    form re-shuffled it three times per round: 11.8s; at node
-    //    counts past broadcast limits flip the hints back);
-    //  - lineage: without truncation the analyzer cost grows 3^rounds
-    //    (each round embeds the previous plan three times — once
-    //    direct, twice via the survivor agg); a lazy localCheckpoint
-    //    every OTHER round keeps the plan constant-size while paying
-    //    the per-checkpoint Catalyst+codegen compile only twice
-    //    (every-round checkpointing measured slower: compile-bound,
-    //    not data-bound — the q70 scheduling-latency-knob lesson).
-    //    Survivor frames persist (consumed by two broadcasts — the
-    //    q91 double-consumer lesson) but are NOT checkpointed: a
-    //    persist costs no plan compile.
-    //    Constraint propagation is off for the build (checkpointed
-    //    constraints go stale — the Dedup CC loop rule).
+    //    the |V|-bounded survivor set, a round side (kcore; the
+    //    SHUFFLE_HASH form re-shuffled the edge frame three times per
+    //    round: 11.8s);
+    //  - lineage: a lazy localCheckpoint every OTHER round
+    //    (GraphRounds.Keep.TruncateEveryOther) keeps the plan
+    //    constant-size.
     // The bipartite customer-supplier graph was probed and REJECTED
     // for this query: its 100 never-peeling high-degree suppliers pin
     // every customer degree, so peeling converges after one round at
     // any threshold.
     "q92_kcore" -> { (s, dir) =>
       import s.implicits._
-      val K = 90
-      val cpKey = "spark.sql.constraintPropagation.enabled"
-      val cpPrev = s.conf.get(cpKey)
-      s.conf.set(cpKey, "false")
-      try {
-        // edge build: the shared co-order scan artifact (round 19 —
-        // GraphEdges.coorderPairs, which keeps the round-7
-        // SHUFFLE_HASH self-join + exchange-free dedup inside the
-        // build); the peel loop starts from the parquet leaf laid out
-        // on src
-        val e0 = GraphEdges.coorderPairs(s, dir)
-          .repartition($"src")
-          .localCheckpoint(eager = false)
-        val eFinal = (1 to 4).foldLeft(e0) { (e, r) =>
-          val next = kcorePeelRound(e, K, broadcastSurvivors = true)
-          if (r % 2 == 1) next.localCheckpoint(eager = false) else next
-        }
-        eFinal.groupBy($"src").agg(count(lit(1)).as("deg"))
-          .select($"src".as("node"), $"deg")
-          .orderBy($"deg".desc, $"node".asc).limit(100)
-      } finally s.conf.set(cpKey, cpPrev)
+      // edge build: the shared co-order scan artifact (round 19 —
+      // GraphEdges.coorderPairs, which keeps the round-7 SHUFFLE_HASH
+      // self-join + exchange-free dedup inside the build); the peel
+      // loop starts from the parquet leaf laid out on src
+      kcore(GraphEdges.coorderPairs(s, dir), k = 90)
+        .groupBy($"src").agg(count(lit(1)).as("deg"))
+        .select($"src".as("node"), $"deg")
+        .orderBy($"deg".desc, $"node".asc).limit(100)
     }
   )
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.operators.GraphRounds.side
 
 /** Round-7 additions: community detection and the SCD2 warehouse
   * primitive.
@@ -14,10 +15,10 @@ import graft.Tables
   * count, ties to the SMALLEST label — all-integer counts and a total
   * tie order, so every round is bit-exact replayable (the float-free
   * graph discipline of q90/q91/q92). Scale shape: edges built once,
-  * pre-partitioned on src and persisted; a round is one broadcast join
-  * of the |V|-bounded label frame (preserves the edge partitioning —
-  * the q92 lesson; past broadcast limits the label side flips to
-  * SHUFFLE_HASH exactly like kcorePeelRound) + one (dst,label) partial
+  * pre-partitioned on dst and persisted; a round is one join of the
+  * |V|-bounded label frame as a GraphRounds.side (broadcast preserves
+  * the edge partitioning — the q92 lesson; with broadcasting off the
+  * side is SHUFFLE_HASH-hinted) + one (dst,label) partial
   * agg + one argmax partial agg over the ≤|E|-bounded count frame —
   * argmax as `max(struct(cnt, -label))`, decomposable, never a window
   * over the graph. 3 rounds is the fixed-depth contract; lineage grows
@@ -36,49 +37,39 @@ object RelationalQueries12 extends QueryModule {
 
   private val Rounds = 3
 
-  /** One synchronous label-propagation round over a dst-partitioned
-    * persisted edge frame: every node adopts its neighbors' most
-    * frequent label, ties to the smallest label (integer argmax as a
-    * decomposable max(struct)). `broadcastLabels = true` is the
-    * measured-fast form (|V|-bounded label frame broadcasts, the round
-    * is exchange-free on the edge side); past the broadcast budget the
-    * caller flips to SHUFFLE_HASH — semantically identical, proven by
-    * GraphRoundFallbackSpec under autoBroadcastJoinThreshold=-1.
+  /** q93's 3 label-propagation rounds over a both-orientation pair
+    * frame (q92's co-order graph, the shared GraphEdges.coorderPairs
+    * artifact): (node, lbl) for every node with an in-edge.
     */
-  def labelPropRound(edges: DataFrame, labels: DataFrame,
-      broadcastLabels: Boolean): DataFrame = {
-    import edges.sparkSession.implicits._
-    val ls = labels.select($"node".as("src"), $"lbl")
-    val side = if (broadcastLabels) broadcast(ls) else ls.hint("SHUFFLE_HASH")
-    edges
-      .join(side, "src")
-      .groupBy($"dst", $"lbl").agg(count(lit(1)).as("cnt"))
-      .groupBy($"dst")
-      .agg(max(struct($"cnt", (-$"lbl").as("nl"))).as("m"))
-      .select($"dst".as("node"), (-$"m.nl").as("lbl"))
+  def labelProp(pairs: DataFrame): DataFrame = {
+    // Partition by DST, not src: hash(dst) satisfies clustering for
+    // both per-round rollups below ((dst,lbl) grouping and the dst
+    // argmax are both dst-subsumed), so after this ONE exchange no
+    // round ever re-shuffles the edge frame — the label side
+    // broadcasts and broadcast joins preserve the partitioning (the
+    // q92 peel lesson; naive src-partitioned form with per-round
+    // (dst,lbl)+dst shuffles measured 5.1s at sf0.1 vs 2.0s for this
+    // shape)
+    val edges = pairs.repartition(col("dst")).persist()
+    val l0 = edges.select(col("dst").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl"))
+    // a round: every node adopts its neighbors' most frequent label,
+    // ties to the smallest (integer argmax as a decomposable
+    // max(struct)) after the (dst, lbl) count over a round side
+    (1 to Rounds).foldLeft(l0) { (labels, _) =>
+      edges.join(side(labels.select(col("node").as("src"), col("lbl"))), "src")
+        .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("cnt"))
+        .groupBy(col("dst"))
+        .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
+        .select(col("dst").as("node"), (-col("m.nl")).as("lbl"))
+    }
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q93_label_prop" -> { (s, dir) =>
       import s.implicits._
-      // q92's edge build via the shared co-order scan artifact (round
-      // 19 — GraphEdges.coorderPairs). Partition by DST, not src:
-      // hash(dst) satisfies clustering for both per-round rollups
-      // below ((dst,lbl) grouping and the dst argmax are both
-      // dst-subsumed), so after this ONE exchange no round ever
-      // re-shuffles the edge frame — the label side broadcasts and
-      // broadcast joins preserve the partitioning (the q92 peel
-      // lesson; naive src-partitioned form with per-round (dst,lbl)+
-      // dst shuffles measured 5.1s at sf0.1 vs 2.0s for this shape)
-      val edges = GraphEdges.coorderPairs(s, dir)
-        .repartition($"dst")
-        .persist()
-      val l0 = edges.select($"dst".as("node")).distinct()
-        .select($"node", $"node".as("lbl"))
-      val lFinal = (1 to Rounds).foldLeft(l0) { (labels, _) =>
-        labelPropRound(edges, labels, broadcastLabels = true)
-      }
-      lFinal.groupBy($"lbl".as("community"))
+      labelProp(GraphEdges.coorderPairs(s, dir))
+        .groupBy($"lbl".as("community"))
         .agg(count(lit(1)).as("n_members"))
         .orderBy($"n_members".desc, $"community".asc)
     },

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.GraphRounds
 
 /** Round-8 relational additions, wave 3 — the experimentation /
   * statistical-testing surface.
@@ -156,14 +157,15 @@ object RelationalQueries15 extends QueryModule {
     // < 2^63, positive operands — DuckDB % == pmod here) and the
     // oracle unrolls the steps as CTEs (the q93 lpRound discipline).
     // Scale shape: the adjacency frame ranks each node's edges once
-    // (two windows on the HIGH-cardinality src key) and persists;
-    // each step is one equi-join of the walker frame against it —
+    // (two windows on the HIGH-cardinality src key the undirected
+    // edges are partitioned on) and persists; each step is one
+    // equi-join of the walker frame (a GraphRounds.side) against it —
     // walker-bounded work per round, graph touched only by lookup.
     "q107_random_walks" -> { (s, dir) =>
       import s.implicits._
       // shared co-trade scan (round 19 — GraphEdges.cotradePairs)
-      val cs = GraphEdges.cotradePairs(s, dir).select($"src", $"dst")
-      val edges = cs.union(cs.select($"dst".as("src"), $"src".as("dst")))
+      val edges = GraphRounds.undirected(
+        GraphEdges.cotradePairs(s, dir).select($"src", $"dst"), "src")
       val wS = Window.partitionBy($"src").orderBy($"dst".asc)
       val wD = Window.partitionBy($"src")
       val adj = edges
@@ -174,7 +176,7 @@ object RelationalQueries15 extends QueryModule {
         .filter($"node" % 2 === 0 && $"node" <= 100)
         .select($"node".as("walk_id"), $"node".as("cur"))
       val steps = (1 to 4).scanLeft(seeds) { (w, t) =>
-        adj.join(broadcast(w), adj("src") === w("cur"))
+        adj.join(GraphRounds.side(w), adj("src") === w("cur"))
           .filter($"rk" === lit(1L) + pmod(
             $"walk_id" * lit(2654435761L) + $"cur" * lit(40503L) +
               lit(t.toLong) * lit(1013904223L), $"deg"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.GraphRounds
 
 /** Round-12 relational/event additions.
   *
@@ -210,8 +211,8 @@ object RelationalQueries17 extends QueryModule {
     // both engines); the absorbing state overrides to 1e6 every round
     // (its empirical outgoing edges are ignored by definition).
     // Monotone non-decreasing in k by construction. Scale: the
-    // |types|²-bounded kernel is the only state; rounds are broadcast
-    // joins + a ≤|types|-group aggregate.
+    // |types|²-bounded kernel is the only state; a round is a join
+    // of a GraphRounds.side + a ≤|types|-group aggregate.
     "q123_absorption" -> { (s, dir) =>
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"us".asc, $"event_id".asc)
@@ -232,10 +233,10 @@ object RelationalQueries17 extends QueryModule {
         when($"state" === "purchase", 1000000L).otherwise(0L).as("p"))
       val pK = (1 to StatRounds).foldLeft(p0) { (p, _) =>
         val reach = trans
-          .join(broadcast(p.withColumnRenamed("state", "dst")), "dst")
+          .join(GraphRounds.side(p.withColumnRenamed("state", "dst")), "dst")
           .groupBy($"src".as("state"))
           .agg(sum($"c" * $"p").as("sp"), max($"ctot").as("ct"))
-        states.join(broadcast(reach), Seq("state"), "left")
+        states.join(GraphRounds.side(reach), Seq("state"), "left")
           .select($"state",
             when($"state" === "purchase", 1000000L)
               .otherwise(coalesce(expr("sp DIV ct"), lit(0L))).as("p"))

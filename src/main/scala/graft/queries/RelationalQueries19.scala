@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.queries.GraphEdges.SeedWalkDepth
 
 /** Round-12 session-3 relational additions (2): seed-set centrality
   * and a deterministic bootstrap.
@@ -55,13 +56,13 @@ object RelationalQueries19 extends QueryModule {
       // item 1; q135_betweenness reads the same table): a length-k walk
       // exists iff the node is within k hops, so the walk table's
       // min-dist column IS the 4-round BFS min-relax result this query
-      // used to iterate per pass (the 4-round broadcast loop — see the
+      // used to iterate per pass (the 4-round relax loop — see the
       // artifact's scaladoc — now runs once per session; the old
       // per-pass loop shape is preserved inside the artifact build).
       // sigma (shortest-path counts) is q135's column; ignored here.
       val dF = GraphEdges.cotradeSeedWalks(s, dir)
         .select($"seed", $"node", $"dist")
-      dF.filter($"dist" >= 1L && $"dist" <= 4L)
+      dF.filter($"dist" >= 1L && $"dist" <= SeedWalkDepth.toLong)
         .groupBy($"node").agg(sum(expr("12 DIV dist")).as("h12"))
         .select($"node", ($"node" % 2).as("ntype"), $"h12",
           ($"h12".cast("double") / lit(12.0)).as("harmonic"))
@@ -91,7 +92,7 @@ object RelationalQueries19 extends QueryModule {
 
   val oracles: Map[String, String] = Map(
     "q126_harmonic" -> {
-      val rounds = (1 to 4)
+      val rounds = (1 to SeedWalkDepth)
         .map(i => bfsRoundSql(if (i == 1) "d0" else s"d${i - 1}", s"d$i"))
         .mkString(",\n")
       s"""WITH cs AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
@@ -108,7 +109,7 @@ object RelationalQueries19 extends QueryModule {
          |  CAST(sum(12 // dist) AS BIGINT) AS h12,
          |  CAST(CAST(sum(12 // dist) AS BIGINT) AS DOUBLE)
          |    / CAST(12.0 AS DOUBLE) AS harmonic
-         |FROM d4 WHERE dist BETWEEN 1 AND 4
+         |FROM d$SeedWalkDepth WHERE dist BETWEEN 1 AND $SeedWalkDepth
          |GROUP BY node
          |ORDER BY h12 DESC, node ASC LIMIT 100""".stripMargin
     },

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.queries.GraphEdges.SeedWalkDepth
 
 /** Round-17 relational addition (VERDICT r16 task 8): the graph
   * family's missing centrality axis beside q90 (PageRank), q91
@@ -72,26 +73,18 @@ import graft.Tables
   */
 object RelationalQueries22 extends QueryModule {
 
-  /** The walk depth AND the pair-distance horizon — one constant, so
-    * raising the depth widens the horizon consistently (the contract
-    * paragraph above; overflow envelope: length-Horizon walk counts
-    * must stay < 2^63, loudly enforced by both engines).
-    */
-  private val Horizon = 4
-
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q135_betweenness" -> { (s, dir) =>
       import s.implicits._
       // the min-dist walk-count table (seed, node, dist, sigma) is the
       // shared GraphEdges.cotradeSeedWalks artifact (round 21 — VERDICT
       // r20 item 1; q126_harmonic reads the same table): the 4-round
-      // broadcast-relax loop builds once per session, the timed pass
+      // relax loop builds once per session, the timed pass
       // starts at the pair stage below. The seed set and walk depth are
-      // GraphEdges.SeedSet / SeedWalkDepth — Horizon must equal the
-      // artifact's depth (asserted) so the pair-distance horizon and
-      // the walk depth stay ONE constant.
-      assert(Horizon == GraphEdges.SeedWalkDepth,
-        "q135 horizon must match the seed-walk artifact depth")
+      // GraphEdges.SeedSet / SeedWalkDepth; the pair-distance horizon IS
+      // the walk depth (one constant, so raising the depth widens the
+      // horizon consistently; overflow envelope: length-depth walk
+      // counts must stay < 2^63, loudly enforced by both engines).
       val seedIds = GraphEdges.SeedSet
       val sF = GraphEdges.cotradeSeedWalks(s, dir)
         .persist() // the pair stage consumes it twice (a and b sides)
@@ -109,7 +102,7 @@ object RelationalQueries22 extends QueryModule {
       // carries how many seed pairs exist vs how many the horizon
       // covers, so an excluded pair is visible in the report itself.
       // n_seed_pairs counts from the SEED SET (C(|seeds|,2)), never
-      // from dstT: a pair whose Horizon-hop balls do not even
+      // from dstT: a pair whose SeedWalkDepth-hop balls do not even
       // intersect has no dstT row at all, and deriving the total from
       // dstT would hide exactly the pairs the contract exists to
       // surface (round-20 self-review)
@@ -121,10 +114,10 @@ object RelationalQueries22 extends QueryModule {
         n * (n - 1) / 2
       }
       val hz = dstT.agg(lit(nSeedPairs).as("n_seed_pairs"),
-        sum(when($"d" <= Horizon.toLong, 1L).otherwise(0L))
+        sum(when($"d" <= SeedWalkDepth.toLong, 1L).otherwise(0L))
           .as("n_pairs_in_horizon"))
       pj.join(broadcast(dstT), Seq("s", "t"))
-        .filter($"d" <= Horizon.toLong && $"dsum" === $"d" &&
+        .filter($"d" <= SeedWalkDepth.toLong && $"dsum" === $"d" &&
           $"node" =!= $"s" && $"node" =!= $"t")
         .groupBy($"node").agg(sum($"prod").as("stress"))
         .crossJoin(broadcast(hz))
@@ -143,7 +136,7 @@ object RelationalQueries22 extends QueryModule {
 
   val oracles: Map[String, String] = Map(
     "q135_betweenness" -> {
-      val rounds = (1 to Horizon).map(roundSql).mkString(",\n")
+      val rounds = (1 to SeedWalkDepth).map(roundSql).mkString(",\n")
       s"""WITH cs AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
          |    CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -169,7 +162,7 @@ object RelationalQueries22 extends QueryModule {
          |hz AS (SELECT
          |  (SELECT CAST(count(*) AS BIGINT) FROM sd a JOIN sd b
          |    ON a.seed < b.seed) AS n_seed_pairs,
-         |  CAST(sum(CASE WHEN d <= $Horizon THEN 1 ELSE 0 END) AS BIGINT)
+         |  CAST(sum(CASE WHEN d <= $SeedWalkDepth THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_pairs_in_horizon FROM dst)
          |SELECT p.node, p.node % 2 AS ntype,
          |  CAST(sum(p.prod) AS BIGINT) AS stress,
@@ -178,7 +171,7 @@ object RelationalQueries22 extends QueryModule {
          |FROM pj p JOIN dst ON dst.s = p.s AND dst.t = p.t
          |  AND p.dsum = dst.d
          |CROSS JOIN hz
-         |WHERE dst.d <= $Horizon AND p.node <> p.s AND p.node <> p.t
+         |WHERE dst.d <= $SeedWalkDepth AND p.node <> p.s AND p.node <> p.t
          |GROUP BY p.node
          |ORDER BY stress DESC, node ASC LIMIT 100""".stripMargin
     }

@@ -162,6 +162,9 @@ object Sources {
       // malformed-record policy (csv/json/xml): PERMISSIVE (nulls +
       // optional corrupt-record column) / DROPMALFORMED / FAILFAST
       "mode", "columnNameOfCorruptRecord",
+      // csv null token: with Spark's default ("") a quoted "" reads as
+      // null too, so only a set nullValue lets it reach a non_empty rule
+      "nullValue",
       // schema evolution across parquet/orc files written at different
       // schema versions: union-of-schemas read
       "mergeSchema",

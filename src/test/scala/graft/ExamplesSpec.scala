@@ -304,6 +304,32 @@ class ExamplesSpec extends SparkSpec {
     GraftSession.release(spark)
   }
 
+  test("the dead-letter example routes a quoted empty text as empty_text") {
+    val in = Files.createTempDirectory("graft_dlin").toString
+    val out = Files.createTempDirectory("graft_dlout").toString
+    Files.writeString(java.nio.file.Paths.get(s"$in/docs.csv"),
+      "doc_id,text,n_tokens\n1,\"a fine document\",50\n2,\"\",50\n")
+    val base = ConfigParser.parseFile(s"$dir/quality_dead_letter.yaml")
+      .pipelines.head
+    val q = base.transformations.head
+    val spec = base.copy(
+      source = base.source.copy(properties =
+        base.source.properties + ("path" -> in)),
+      transformations = Seq(q.copy(properties =
+        q.properties + ("deadLetterPath" -> s"$out/rejects"))),
+      sink = base.sink.copy(properties =
+        base.sink.properties + ("path" -> s"$out/clean")))
+    val mgr = new PipelineManager(spark)
+    assert(mgr.submit(spec) == mgr.Completed)
+    val dead = spark.read.parquet(s"$out/rejects").collect()
+      .map(r => (r.getAs[String]("doc_id"),
+        r.getAs[Seq[String]]("violated_rules"))).toSeq
+    assert(dead == Seq(("2", Seq("empty_text"))))
+    assert(spark.read.parquet(s"$out/clean").collect()
+      .map(_.getAs[String]("doc_id")).toSeq == Seq("1"))
+    GraftSession.release(spark)
+  }
+
   test("the curation example runs end to end on real data") {
     val in = Files.createTempDirectory("graft_exin").toString
     val out = Files.createTempDirectory("graft_exout").toString
