@@ -239,6 +239,14 @@ object Dedup {
     * common in hamming-ball graphs). Labels are eagerly
     * localCheckpoint'ed per round, so lineage and storage stay O(1).
     *
+    * When the directed edge list (2 rows per input pair, duplicates
+    * counted — deduping it would cost a shuffle just to pick a path; both
+    * paths are correct) fits [[SizeGate.UnionFindEdges]], a single-task
+    * union-find (executor-side, never the driver) replaces the loop: a
+    * dedup pair graph is a vanishing fraction of its corpus, and one task
+    * walking it beats O(log diameter) synchronized Spark jobs by the
+    * whole scheduling latency.
+    *
     * @param vertices column `id` — every vertex, including singletons
     *                 (they emit component == id). Any additional columns
     *                 ride through to the output unchanged (so callers
@@ -251,28 +259,10 @@ object Dedup {
     *                 the vertex set would propagate connectivity through
     *                 (and could label components by) an id that no
     *                 vertex row carries
-    * @param localEdgeThreshold when the directed edge list (2 rows per
-    *                 input pair, duplicates COUNTED — deduping the
-    *                 routing count would cost a shuffle just to pick a
-    *                 path, so a duplicate-heavy pairs frame may
-    *                 overestimate and route a small graph to the
-    *                 iterative path; both paths are correct)
-    *                 holds at most this many rows, skip the iterative
-    *                 loop and run a single-task union-find over the
-    *                 edges (executor-side, never the driver): a dedup
-    *                 pair graph is a vanishing fraction of its corpus —
-    *                 petabytes of documents typically yield only
-    *                 millions of near-dup edges — and one task walking
-    *                 them beats O(log diameter) synchronized Spark jobs
-    *                 by the whole scheduling latency. Memory contract:
-    *                 O(incident vertices) in ONE task (~100 bytes/
-    *                 vertex); above the threshold the min-label loop
-    *                 runs with per-task memory independent of edge
-    *                 count. Pass 0 to force the iterative path.
     * @return vertex columns + `component` = min id in the component
     */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame,
-      maxIters: Int = 50, localEdgeThreshold: Long = 2000000L): DataFrame = {
+      maxIters: Int = 50): DataFrame = {
     // localCheckpoint (eager) after every round: truncates lineage so the
     // plan stays O(1) across iterations and the edges/labels self-join
     // never becomes ambiguous (labels would otherwise contain edges in
@@ -299,19 +289,15 @@ object Dedup {
     // actual shrinking label sizes)
     try {
     // Lazy checkpoint (safe only with constraint propagation off — see
-    // above), materialized by the routing count: one tiny job answers
+    // above), materialized by the size probe: one tiny job answers
     // "how big is the pair graph" and pins the edges for whichever path
     // runs.
     val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
       .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
       .localCheckpoint(eager = false)
-    val edgeCount = edges.count()
     val labels: DataFrame =
-      if (edgeCount <= localEdgeThreshold) {
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"[cc] local union-find over $edgeCount edges")
-        localUnionFind(edges)
-      } else iterativeMinLabel(edges, maxIters)
+      if (SizeGate.fits(edges, SizeGate.UnionFindEdges)) localUnionFind(edges)
+      else iterativeMinLabel(edges, maxIters)
     vertices
       .join(labels.withColumnRenamed("id", "__lid"),
         col("id") === col("__lid"), "left")
@@ -443,8 +429,6 @@ object Dedup {
       labels = next
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"[cc] converged after $iter rounds")
     // The returned frame is a materialized checkpoint: it no longer
     // references the edge frame, so the edges checkpoint is dead too.
     // (The small-graph path must NOT do this — localUnionFind's output
@@ -568,8 +552,7 @@ object Dedup {
   def minhashDedupFold(prev: Option[DataFrame], batch: DataFrame,
       idCol: String, textCol: String, mode: String = "word", n: Int = 3,
       numHashes: Int = 128, bands: Int = 0,
-      tauNum: Int = 1, tauDen: Int = 2,
-      smallBatchDocs: Long = 65536L): DataFrame = {
+      tauNum: Int = 1, tauDen: Int = 2): DataFrame = {
     // round 17 (VERDICT r16 task 1): integral-id corpora run the
     // bounded-phase engine (anyRule = true) — the naive exploded
     // band-candidate plan below is quadratic in duplicate depth
@@ -584,7 +567,7 @@ object Dedup {
     if (Seq("byte", "short", "int", "integer", "long", "bigint")
         .contains(idT0))
       return minhashFoldEngine(prev, batch, idCol, textCol, mode, n,
-        numHashes, bands, tauNum, tauDen, smallBatchDocs, anyRule = true)
+        numHashes, bands, tauNum, tauDen, anyRule = true)
     // bands <= 0 = "derive from tau": the recall-preserving banding
     // (Transforms.recallBandRows — the single rule the YAML stage
     // uses). A FIXED band count independent of tau silently loses
@@ -739,10 +722,9 @@ object Dedup {
   def minhashDedupFoldSurvivors(prev: Option[DataFrame], batch: DataFrame,
       idCol: String, textCol: String, mode: String = "word", n: Int = 3,
       numHashes: Int = 128, bands: Int = 0,
-      tauNum: Int = 1, tauDen: Int = 2,
-      smallBatchDocs: Long = 65536L): DataFrame =
+      tauNum: Int = 1, tauDen: Int = 2): DataFrame =
     minhashFoldEngine(prev, batch, idCol, textCol, mode, n, numHashes,
-      bands, tauNum, tauDen, smallBatchDocs, anyRule = false)
+      bands, tauNum, tauDen, anyRule = false)
 
   /** The shared bounded-phase fold engine behind BOTH incremental
     * rules (round 17 — VERDICT r16 task 1 generalized the round-16
@@ -764,7 +746,7 @@ object Dedup {
     *     (not only kept ones), and index every member.
     * Everything else — exact-sig clique collapse to reps, per-bucket
     * spanning-edge kernels, CC, per-component executor sweeps, the
-    * ≤smallBatchDocs single-task fast path — is rule-independent
+    * [[SizeGate.SweepDocs]] single-task fast path — is rule-independent
     * (the rep reduction holds for both rules: adjacency is a pure
     * function of signatures, so x matches y iff x matches y's class
     * minimum, which is never larger).
@@ -772,8 +754,7 @@ object Dedup {
   private def minhashFoldEngine(prev: Option[DataFrame], batch: DataFrame,
       idCol: String, textCol: String, mode: String, n: Int,
       numHashes: Int, bands: Int,
-      tauNum: Int, tauDen: Int,
-      smallBatchDocs: Long, anyRule: Boolean): DataFrame = {
+      tauNum: Int, tauDen: Int, anyRule: Boolean): DataFrame = {
     val spark = batch.sparkSession
     val bandsEff = effectiveBands(numHashes, bands, tauNum, tauDen)
     val cpKey = "spark.sql.constraintPropagation.enabled"
@@ -882,9 +863,9 @@ object Dedup {
       // processed doc indexes and any smaller match flags. History
       // rows index per rule under their pinned flags (any rule: all;
       // keep-first: survivors only) and are never re-decided.
-      // Memory: O(rows) sigs in one task (~2.5KB/doc — the
-      // smallBatchDocs contract). Decisions are identical to the
-      // phased/distributed path — candidates there are component
+      // Memory: O(rows) sigs in one task (the SizeGate.SweepDocs
+      // contract). Decisions are identical to the phased/distributed
+      // path — candidates there are component
       // members, and any exact-rule partner shares a bucket, hence a
       // component.
       def singleTaskSweep(frame: DataFrame): DataFrame = {
@@ -944,28 +925,15 @@ object Dedup {
           }
         spark.createDataset(swept).toDF("id")
       }
-      // stage timing behind the survivor-debug flag (driver-side
-      // stderr only — diagnosing which engine stage moves at scale)
-      val survDebug = sys.env.contains("GRAFT_SURV_DEBUG")
-      def timed[A](tag: String)(f: => A): A =
-        if (!survDebug) f
-        else {
-          val t0 = System.nanoTime; val v = f
-          // scalastyle:off println
-          System.err.println(
-            f"[foldengine] $tag ${(System.nanoTime - t0) / 1e9}%.2f s")
-          // scalastyle:on println
-          v
-        }
       // corpus sizes drive the path choice: batchN's count also
       // materializes the signature kernel into sigsB's persist (every
-      // later consumer reads it), histN is a cached-state or parquet
-      // count — both cheap relative to one band join
-      val batchN = timed("batchN")(sigsB.count())
-      val histN = timed("histN")(prev.map(_.count()).getOrElse(0L))
+      // later consumer reads it) and stays exact for the short-circuit
+      // below; history is only probed for the room the batch leaves
+      val batchN = sigsB.count()
       val dupIds: DataFrame = if (batchN == 0L) {
         spark.emptyDataset[Long].toDF("id").localCheckpoint(true)
-      } else if (histN + batchN <= smallBatchDocs) {
+      } else if (SizeGate.fits(batchN, SizeGate.SweepDocs) &&
+          prev.forall(SizeGate.fits(_, SizeGate.SweepDocs - batchN))) {
         // UNIFIED SMALL-CORPUS FAST PATH (round 18 — VERDICT r17
         // task 2): when history + batch fit one sweep task, skip the
         // phased history passes entirely — the two broadcast band
@@ -986,10 +954,9 @@ object Dedup {
       // flagged-id frame is batch-bounded and is consumed twice (the
       // anti-join and the final decision union) — without it the
       // history scan runs twice per action.
-      val dupHist1 = timed("dupHist1")(histSurv.map(p =>
-        matchedVs(sigsB, p).localCheckpoint(true)))
-      if (timed("short-circuit check")(
-          dupHist1.exists(_.count() == batchN))) {
+      val dupHist1 = histSurv.map(p =>
+        matchedVs(sigsB, p).localCheckpoint(true))
+      if (dupHist1.exists(_.count() == batchN)) {
         // und1-empty short-circuit (round 18, VERDICT r17 task 2):
         // the survivor pass flagged EVERY batch doc, so the dup-pool
         // pass and all sweeps could only re-derive held flags. The
@@ -1031,11 +998,12 @@ object Dedup {
       // (distinct — a doc can be flagged by both sides).
       val sweepBase = if (anyRule) sigsB else undecided
       // anyRule's sweep base is the whole batch — reuse batchN
-      // instead of paying another count job
-      val nUndecided = timed("nUndecided")(
-        if (anyRule) batchN else sweepBase.count())
-      val dupNew: DataFrame = if (nUndecided <= smallBatchDocs) {
-        timed("fastSweep")(singleTaskSweep(sweepRows(sweepBase, hist = false)))
+      // instead of paying another probe job
+      val sweepFits =
+        if (anyRule) SizeGate.fits(batchN, SizeGate.SweepDocs)
+        else SizeGate.fits(sweepBase, SizeGate.SweepDocs)
+      val dupNew: DataFrame = if (sweepFits) {
+        singleTaskSweep(sweepRows(sweepBase, hist = false))
       } else {
       // ---- DISTRIBUTED PATH (undecided set beyond one task) ----
       // phase 2a: exact-signature clique collapse (the r10
@@ -1158,19 +1126,6 @@ object Dedup {
         .distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       internals += spanEdges
-      if (sys.env.contains("GRAFT_SURV_DEBUG")) {
-        // scalastyle:off println
-        def t[A](tag: String)(f: => A): Unit = {
-          val s = System.nanoTime
-          val v = f
-          System.err.println(s"[survfold] $tag = $v " +
-            f"(${(System.nanoTime - s) / 1e9}%.2f s)")
-        }
-        t("sigClasses")(sigClasses.count())
-        t("bucketSets")(bucketSets.count())
-        t("spanEdges")(spanEdges.count())
-        // scalastyle:on println
-      }
       // phase 3: components over the spanning forest (edge-incident
       // docs only — everyone else already survived). Components are
       // dup-class-sized (probed: max 200 members at 100x, vs the
@@ -1214,14 +1169,13 @@ object Dedup {
       // now materialized, so every internal frame and the phase-1
       // checkpoints can be released before the lazy state returns —
       // the fold retains exactly sigsB + this id list per batch
-      val ids = timed("dupIds checkpoint")(
-        (dupHist1.toSeq ++ dupHist2.toSeq :+ dupNew)
+      val ids = (dupHist1.toSeq ++ dupHist2.toSeq :+ dupNew)
         .reduce(_ unionByName _)
         // anyRule sweeps decide every batch doc, so a doc can carry
         // both a history flag and a sweep flag — the state join
         // multiplies rows on duplicate ids without this
         .distinct()
-        .localCheckpoint(true))
+        .localCheckpoint(true)
       internals.foreach(_.unpersist(false))
       dupHist1.foreach(dropCheckpoint)
       dupHist2.foreach(dropCheckpoint)
@@ -1441,12 +1395,12 @@ object Dedup {
   def prefixFilterJaccardPairs(rawDf: DataFrame, idCol: String,
       tokensCol: String, tauNum: Int, tauDen: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // SMALL-INPUT FAST PATH (round 20 — the minhashFoldEngine ≤64k /
-    // localUnionFind idiom): the committed caller (dedup_ppjoin) feeds
-    // a FIXED-SIZE audit stratum (~2000 docs at any scale), and the
-    // distributed ladder's ~10 fixed stages (ensure shuffle, df agg,
-    // rarity window, checkpoint job, candidate distinct, two verify
-    // joins) cost ~3 s of pure scheduling on it. One single-task
+    // SMALL-INPUT FAST PATH (round 20 — the minhashFoldEngine /
+    // localUnionFind idiom, gated at SizeGate.PrefixKernelDocs): the
+    // committed caller (dedup_ppjoin) feeds a FIXED-SIZE audit stratum
+    // (~2000 docs at any scale), and the distributed ladder's ~10 fixed
+    // stages (ensure shuffle, df agg, rarity window, checkpoint job,
+    // candidate distinct, two verify joins) cost ~3 s of pure scheduling on it. One single-task
     // kernel runs the identical algorithm — global (df, token) rarity
     // order, integer prefix cut, postings candidates under the
     // length + positional filters, exact integer verify — in one job.
@@ -1454,12 +1408,12 @@ object Dedup {
     // Spark's UTF8 binary order: the prefix principle (and PPJoin's
     // positional bound) hold for ANY consistent total order, and the
     // output is re-verified per pair, so candidate-set differences
-    // cannot change the result. Long ids only (the committed caller);
-    // other id types take the distributed path.
+    // cannot change the result. The kernel reads long ids (the
+    // committed caller's); other id types take the distributed path.
     if (rawDf.schema(idCol).dataType ==
         org.apache.spark.sql.types.LongType) {
       val in = rawDf.select(col(idCol).as("__id"), col(tokensCol).as("__toks"))
-      if (in.count() <= 16384L) {
+      if (SizeGate.fits(in, SizeGate.PrefixKernelDocs)) {
         val sq = rawDf.sparkSession
         import sq.implicits._
         // eager localCheckpoint FIRST — tokenization at scan

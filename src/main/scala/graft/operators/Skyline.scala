@@ -26,9 +26,13 @@ import org.apache.spark.sql.types._
   *   3. join the surviving (x, ymax) pairs back to the input to
   *      recover full rows — broadcast when the frontier is small (the
   *      expected case: O(log n) points for independent dims), shuffle
-  *      join above `broadcastLimit` (anti-correlated dims can make the
-  *      frontier arbitrarily large; correctness never depends on it
-  *      being small).
+  *      join above [[SizeGate.BroadcastKeys]] (anti-correlated dims can
+  *      make the frontier arbitrarily large; correctness never depends
+  *      on it being small).
+  *
+  * Stage 2 runs as ONE executor task instead when the group maxima fit
+  * [[SizeGate.SkylineGroups]] (the common case once stage 1 collapsed
+  * the data).
   *
   * The dimensions are symmetric — pick the LOWER-cardinality one as
   * `xCol`: stage 2's per-distinct-x work then runs on a frame the
@@ -46,19 +50,16 @@ object Skyline {
     * date type with exact ordering (no doubles — cross-engine
     * NaN/-0.0 ordering is not worth the hazard in an exact operator).
     */
-  def pareto2D(rawDf: DataFrame, xCol: String, yCol: String,
-      broadcastLimit: Long = 1000000L,
-      singleTaskLimit: Long = 2000000L): DataFrame = {
+  def pareto2D(rawDf: DataFrame, xCol: String, yCol: String): DataFrame = {
     // no Parallelism.ensure: the per-row work is one codegen'd agg
     // comparison — an up-front round-robin shuffle costs more than it
     // parallelizes (scan parallelism is governed by file splits)
     val df = rawDf
     val grouped = df.groupBy(col(xCol)).agg(max(col(yCol)).as("__ymax"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nGroups = grouped.count()
     val yIdx = grouped.schema.fieldIndex("__ymax")
     val yOrd = orderingFor(grouped.schema(yIdx).dataType)
-    val frontierKeys = (if (nGroups <= singleTaskLimit) {
+    val frontierKeys = (if (SizeGate.fits(grouped, SizeGate.SkylineGroups)) {
       // small-side fast path (the common case once stage 1 collapsed
       // the data): ONE executor task sorts the group maxima and scans
       // with the strict running max — no range-partitioner sample job,
@@ -107,10 +108,9 @@ object Skyline {
         .select(col(xCol), col("__ymax"))
     }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // recover full rows: the frontier is usually tiny -> broadcast (the
-    // count is one cheap job over the already-collapsed frame)
-    val nFrontier = frontierKeys.count()
-    val keys = if (nFrontier <= broadcastLimit) broadcast(frontierKeys)
-      else frontierKeys
+    // probe is cheap over the already-collapsed frame)
+    val keys = if (SizeGate.fits(frontierKeys, SizeGate.BroadcastKeys))
+      broadcast(frontierKeys) else frontierKeys
     df.join(keys,
         df(xCol) === keys(xCol) && df(yCol) === keys("__ymax"))
       .select(df.columns.map(df(_)).toSeq: _*)

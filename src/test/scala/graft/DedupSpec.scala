@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, SizeGate}
 
 class DedupSpec extends SparkSpec {
 
@@ -20,13 +20,13 @@ class DedupSpec extends SparkSpec {
       Seq(200L -> 200L, 201L -> 201L)).toMap
     // both paths must produce the identical labeling: the single-task
     // union-find (small graphs route here by default) and the iterative
-    // min-label loop (forced via localEdgeThreshold = 0)
+    // min-label loop (forced via SizeGate.distributed)
     val local = graft.operators.Dedup.connectedComponents(vertices, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == expect)
-    val iterative = graft.operators.Dedup.connectedComponents(
-        vertices, pairs, localEdgeThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val iterative = SizeGate.distributed(graft.operators.Dedup
+      .connectedComponents(vertices, pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(iterative == expect)
   }
 
@@ -35,9 +35,10 @@ class DedupSpec extends SparkSpec {
     // a corpus with planted near-dups straddling the τ = 3/4 boundary:
     // base sets of 8 tokens, copies with 0/1/2 substitutions
     // (J = 1, 7/9 ≈ .78 ≥ 3/4, 6/10 = .6 < 3/4), plus disjoint noise
-    // docs and an empty doc. Long ids route to the round-20 single-task
-    // kernel; the SAME rows with int ids take the distributed ladder —
-    // both must emit the identical (id_a, id_b, inter, uni) set.
+    // docs and an empty doc. By default the rows route to the round-20
+    // single-task kernel; under SizeGate.distributed they take the
+    // distributed ladder — both must emit the identical
+    // (id_a, id_b, inter, uni) set.
     val base = (0 until 12).map(k => s"w${k}")
     def doc(id: Long, toks: Seq[String]) = (id, toks)
     val docs = Seq(
@@ -52,11 +53,10 @@ class DedupSpec extends SparkSpec {
     val fast = Dedup.prefixFilterJaccardPairs(docs, "doc_id", "toks", 3, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
-    val dist = Dedup.prefixFilterJaccardPairs(
-        docs.withColumn("doc_id", col("doc_id").cast("int")),
-        "doc_id", "toks", 3, 4)
-      .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong,
-        r.getLong(2), r.getLong(3))).toSet
+    val dist = SizeGate.distributed(
+      Dedup.prefixFilterJaccardPairs(docs, "doc_id", "toks", 3, 4)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSet)
     assert(fast == dist)
     // the planted structure is actually exercised
     assert(fast.contains((1L, 2L, 8L, 8L)))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, SizeGate}
 
 /** The incremental minhash-dedup contract: folding in-order batches
   * produces EXACTLY the state one fold over everything would — each
@@ -46,16 +46,16 @@ class MinhashStreamSpec extends SparkSpec {
     val ids = docs.select(col("doc_id")).orderBy(col("doc_id"))
       .collect().map(_.getLong(0))
     val mid = ids(ids.length / 2)
-    // smallBatchDocs = 0 forces the PHASED engine path — the plan this
-    // test pins; the small spec corpus would otherwise take the
+    // SizeGate.distributed forces the PHASED engine path — the plan
+    // this test pins; the small spec corpus would otherwise take the
     // round-18 unified single-task sweep, which has no probe join
-    val prev = Dedup.minhashDedupFold(None,
-      docs.filter(col("doc_id") <= mid), "doc_id", "text",
-      smallBatchDocs = 0L).persist()
-    prev.count()
-    val next = Dedup.minhashDedupFold(Some(prev),
-      docs.filter(col("doc_id") > mid), "doc_id", "text",
-      smallBatchDocs = 0L)
+    val next = SizeGate.distributed {
+      val prev = Dedup.minhashDedupFold(None,
+        docs.filter(col("doc_id") <= mid), "doc_id", "text").persist()
+      prev.count()
+      Dedup.minhashDedupFold(Some(prev),
+        docs.filter(col("doc_id") > mid), "doc_id", "text")
+    }
     val p = next.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"),
       "the band probe must broadcast the batch side")
@@ -69,8 +69,8 @@ class MinhashStreamSpec extends SparkSpec {
     // the phased plan it elides — whole-corpus fold AND a mid-split
     // fold (the boundary is where the history-index logic could
     // diverge from the phased history passes)
-    val phasedFull = canon(Dedup.minhashDedupFold(None, docs,
-      "doc_id", "text", smallBatchDocs = 0L))
+    val phasedFull = canon(SizeGate.distributed(
+      Dedup.minhashDedupFold(None, docs, "doc_id", "text")))
     assert(phasedFull == full, "phased whole-corpus fold diverged")
     val mid = docs.agg(((min(col("doc_id")) + max(col("doc_id"))) / 2)
       .cast("long")).head().getLong(0)
@@ -78,12 +78,12 @@ class MinhashStreamSpec extends SparkSpec {
       docs.filter(col("doc_id") <= mid), "doc_id", "text").persist()
     val nextU = Dedup.minhashDedupFold(Some(prevU),
       docs.filter(col("doc_id") > mid), "doc_id", "text")
-    val prevP = Dedup.minhashDedupFold(None,
-      docs.filter(col("doc_id") <= mid), "doc_id", "text",
-      smallBatchDocs = 0L).persist()
-    val nextP = Dedup.minhashDedupFold(Some(prevP),
-      docs.filter(col("doc_id") > mid), "doc_id", "text",
-      smallBatchDocs = 0L)
+    val nextP = SizeGate.distributed {
+      val prevP = Dedup.minhashDedupFold(None,
+        docs.filter(col("doc_id") <= mid), "doc_id", "text").persist()
+      Dedup.minhashDedupFold(Some(prevP),
+        docs.filter(col("doc_id") > mid), "doc_id", "text")
+    }
     assert(canon(nextU) == canon(nextP), "split fold diverged across paths")
     GraftSession.release(spark)
   }

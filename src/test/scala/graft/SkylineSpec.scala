@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Skyline
+import graft.operators.{SizeGate, Skyline}
 
 class SkylineSpec extends SparkSpec {
 
@@ -33,7 +33,7 @@ class SkylineSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  test("property: the wide-path ladder (singleTaskLimit=0) matches the spec too") {
+  test("property: the wide-path ladder (SizeGate.distributed) matches the spec too") {
     import spark.implicits._
     import org.scalacheck.{Gen, Prop}
     val ptsGen = Gen.nonEmptyListOf(for {
@@ -44,9 +44,10 @@ class SkylineSpec extends SparkSpec {
       Prop.forAll(ptsGen) { raw =>
         val pts = raw.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
         val df = pts.toDF("id", "x", "y").repartition(4)
-        // singleTaskLimit=0 forces the range-ladder path on tiny data
-        val got = Skyline.pareto2D(df, "x", "y", singleTaskLimit = 0L)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        // forces the range-ladder path and the shuffled row-recovery
+        // join on tiny data
+        val got = SizeGate.distributed(Skyline.pareto2D(df, "x", "y")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
         got == bruteFrontier(pts)
       })
     assert(res.passed, res.status.toString)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, SizeGate}
 
 /** The survivor-pool greedy fold (round 14 — VERDICT r13 task 1):
   * the keep-first rule's two contract properties on fixtures built to
@@ -94,7 +94,7 @@ class SurvivorFoldSpec extends SparkSpec {
     GraftSession.release(spark)
   }
 
-  test("distributed path == small-batch fast path (forced via smallBatchDocs=0)") {
+  test("distributed path == small-batch fast path (forced via SizeGate.distributed)") {
     import spark.implicits._
     // the chain + a deep class + singletons, one shot: the forced
     // distributed path (sig collapse + bucket kernels + CC + component
@@ -106,8 +106,8 @@ class SurvivorFoldSpec extends SparkSpec {
         .toDF("doc_id", "text"))
     val fast = Dedup.minhashDedupFoldSurvivors(None, docs, "doc_id", "text",
       mode = "word", n = 1, tauNum = 1, tauDen = 3)
-    val dist = Dedup.minhashDedupFoldSurvivors(None, docs, "doc_id", "text",
-      mode = "word", n = 1, tauNum = 1, tauDen = 3, smallBatchDocs = 0L)
+    val dist = SizeGate.distributed(Dedup.minhashDedupFoldSurvivors(None,
+      docs, "doc_id", "text", mode = "word", n = 1, tauNum = 1, tauDen = 3))
     assert(canon(dist) === canon(fast))
     assert(canon(dist).filter(!_._2).map(_._1) === Seq(1L, 3L, 10L, 20L))
     GraftSession.release(spark)
