@@ -26,12 +26,23 @@ object SizeGate {
   /** Whether a size `n` that is already counted is within `limit`. */
   def fits(n: Long, limit: Long): Boolean = !forced.value && n <= limit
 
-  /** Whether `df` has at most `limit` rows. A bounded probe: each task
-    * reads at most `limit + 1` rows past any persist or checkpoint of `df`,
-    * and fills that persist or checkpoint as a full `count()` would.
+  /** Whether `df` has at most `limit` rows. A bounded probe in one Spark
+    * job with no shuffle: each task counts at most `limit + 1` rows of its
+    * partition of the column-less frame, and the driver sums the counts.
+    * A persist or checkpoint under `df` stores each partition whole
+    * before the task reads it, so the probe fills it as a full `count()`
+    * would. Inside [[distributed]] the probe still runs (and fills) but
+    * the answer is "no".
     */
-  def fits(df: DataFrame, limit: Long): Boolean =
-    limit >= 0 && fits(df.select().limit((limit + 1).toInt).count(), limit)
+  def fits(df: DataFrame, limit: Long): Boolean = limit >= 0 && {
+    val cap = limit + 1
+    val n = df.select().queryExecution.toRdd.mapPartitions { rows =>
+      var k = 0L
+      while (k < cap && rows.hasNext) { rows.next(); k += 1 }
+      Iterator.single(k)
+    }.fold(0L)(_ + _)
+    fits(n, limit)
+  }
 
   /** Runs `body` with every gate answering "no", so a spec reaches the
     * distributed plans on small data. Threads started inside `body`, such

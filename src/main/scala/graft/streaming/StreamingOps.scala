@@ -535,12 +535,31 @@ object StreamingOps {
     * mutable source directory; the survivors frame eagerly
     * localCheckpoints too (its source version dir is mutable state a
     * LATER snapshot may prune).
+    *
+    * What a version already knows is not recounted. ONE pass over the
+    * batch (the job that fills its checkpoint) gives its row count,
+    * which the fold engine takes instead of counting, and its min and
+    * max id. Beside `_crawl_min`, each version records the state's max
+    * id (`_state_max`) and the schema it was written with (`_schema`),
+    * both committed by the same rename; an empty batch carries the max
+    * forward. The newest version is read, and the survivors re-read,
+    * with the recorded schema, so no read runs a schema-inference job.
+    * The order guard compares the batch's min id with the recorded max
+    * on the driver. The state is
+    * counted only when the batch reaches at or below that max (the
+    * replay-or-refuse path, whose refusal reports the count) or when
+    * the newest version records no max (versions written before the
+    * record, or a state with no id yet); a version without a recorded
+    * schema is read with inference, as before.
     */
   def minhashDedupSnapshot(batch: DataFrame, idCol: String,
       textCol: String, stateDir: String, mode: String = "word", n: Int = 3,
       bands: Int = 0, tauNum: Int = 1, tauDen: Int = 2,
       retainVersions: Int = 2): DataFrame = {
     import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.types.{DataType, StringType, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.operators.Dedup
     val spark = batch.sparkSession
     val fs = new Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -563,41 +582,62 @@ object StreamingOps {
       "numHashes" -> "128", "bands" -> bandsEff.toString,
       "tau" -> s"$tauNum/$tauDen", "mode" -> mode, "n" -> n.toString))
     val versions = stateVersions(spark, stateDir)
-    val prev = versions.lastOption
-      .map(v => spark.read.parquet(s"$stateDir/v=$v"))
-    def readCrawlMin(v: Long): Option[String] = {
-      val m = new Path(s"$stateDir/v=$v/_crawl_min")
+    def readMarker(v: Long, name: String): Option[String] = {
+      val m = new Path(s"$stateDir/v=$v/$name")
       if (!fs.exists(m)) None
       else {
         val in = fs.open(m)
         val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
-        Some(txt.trim).filter(_.nonEmpty)
+        Some(txt).filter(_.nonEmpty)
       }
     }
+    // a version read with its recorded schema runs no inference job
+    def readVersion(v: Long, schema: Option[StructType]): DataFrame =
+      schema.fold(spark.read)(spark.read.schema).parquet(s"$stateDir/v=$v")
+    val lastSchema = versions.lastOption.flatMap(readMarker(_, "_schema"))
+      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+    val prev = versions.lastOption.map(readVersion(_, lastSchema))
     // ONE consistent snapshot of the input for the whole guard+fold
     // lifetime: a file-source batch would otherwise be re-scanned by
-    // every separate action below (min-id guard, replay counts, the
+    // every separate action below (the id pass, replay counts, the
     // fold, the survivor semi-join), and a source directory gaining a
-    // file between the min-id action and the fold could slip rows
-    // below the checked min past the id-order guard.
-    val snap = batch.localCheckpoint(true)
+    // file between the id pass and the fold could slip rows below the
+    // checked min past the id-order guard. The id pass is the
+    // checkpoint's first job and fills it.
+    val snap = batch.localCheckpoint(false)
     try {
-      def survivorsFrom(v: Long): DataFrame = {
-        val committed = spark.read.parquet(s"$stateDir/v=$v")
+      def survivorsFrom(v: Long, schema: Option[StructType]): DataFrame =
         snap.join(
-            committed.filter(!col("is_dup")).select(col("id").as(idCol)),
+            readVersion(v, schema).filter(!col("is_dup"))
+              .select(col("id").as(idCol)),
             Seq(idCol), "left_semi")
           .localCheckpoint(true)
-      }
       // the order guard compares ids in the id column's NATIVE
       // ordering — the same `<` the fold's smaller-id rule uses
       // (string ids compare lexicographically on both)
-      val minB = snap.agg(min(col(idCol)).as("m")).head()
+      val idT = snap.schema(idCol).dataType
+      val (batchN, minB, maxB) = idStats(snap, idCol)
+      def scalaId(v: Any) =
+        org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .convertToScala(v, idT)
       prev.foreach { p =>
-        val overlap =
-          if (minB.isNullAt(0)) 0L
-          else p.filter(col("id") >= lit(minB.get(0))).count()
+        // the newest version's recorded max id settles the guard on the
+        // driver (integral or string ids); the state is counted only for
+        // a batch that reaches down to it, or for a version without it
+        val stateT = p.schema("id").dataType
+        val atOrBelowMax = readMarker(versions.last, "_state_max").collect {
+          case m if Dedup.integralId(stateT) && Dedup.integralId(idT) =>
+            (v: Any) => v.asInstanceOf[Number].longValue <= m.toLong
+          case m if stateT == StringType && idT == StringType =>
+            (v: Any) => v.asInstanceOf[UTF8String]
+              .compareTo(UTF8String.fromString(m)) <= 0
+        }
+        val overlap = minB match {
+          case Some(mb) if atOrBelowMax.forall(_(mb)) =>
+            p.filter(col("id") >= lit(scalaId(mb))).count()
+          case _ => 0L
+        }
         if (overlap > 0) {
           // exact re-run of the NEWEST committed crawl? -> idempotent:
           // return its survivors, fold nothing. The newest crawl's id
@@ -606,43 +646,49 @@ object StreamingOps {
           // overlap and refuses. Legacy versions without the marker
           // fall back to at-or-above-batch-min (suffix-subset replays
           // pass there — see scaladoc).
-          val idType = p.schema("id").dataType
-          val crawlFloor = readCrawlMin(versions.last)
-            .map(cm => lit(cm).cast(idType))
-            .getOrElse(lit(minB.get(0)))
+          val crawlFloor = readMarker(versions.last, "_crawl_min")
+            .map(cm => lit(cm).cast(stateT))
+            .getOrElse(lit(scalaId(minB.get)))
           val stateIds = p.filter(col("id") >= crawlFloor).select(col("id"))
           val batchIds = snap.select(col(idCol).as("id"))
           val isReplay =
             stateIds.unionByName(batchIds).distinct().count() ==
               batchIds.distinct().count() &&
             stateIds.count() == batchIds.distinct().count()
-          if (isReplay) return survivorsFrom(versions.last)
+          if (isReplay) return survivorsFrom(versions.last, lastSchema)
           throw new IllegalStateException(
             s"minhashDedupSnapshot($stateDir): batch min id " +
-              s"${minB.get(0)} is at or below $overlap already-folded " +
+              s"${scalaId(minB.get)} is at or below $overlap already-folded " +
               "state id(s) and the batch is NOT an exact re-run of the " +
               "newest crawl — snapshots must arrive in non-decreasing " +
               "id order (the fold's smaller-id-decided contract). " +
               "Nothing was folded.")
         }
       }
-      val st = graft.operators.Dedup.minhashDedupFold(prev, snap, idCol,
-        textCol, mode, n, bands = bandsEff, tauNum = tauNum, tauDen = tauDen)
+      val st = Dedup.minhashDedupFoldCounted(prev, snap, Some(batchN),
+        idCol, textCol, mode, n, 128, bandsEff, tauNum, tauDen)
       val vNew = versions.lastOption.getOrElse(-1L) + 1L
       val staging = new Path(s"$stateDir/_staging_$vNew")
       fs.delete(staging, true)
       st.write.mode("overwrite").parquet(staging.toString)
-      // crawl-boundary marker rides the staging dir so the rename
-      // commits it atomically with the version. An EMPTY batch (null
-      // min) carries the prior boundary forward: the newest-crawl id
-      // set did not change.
-      val markerVal: Option[String] =
-        if (!minB.isNullAt(0)) Some(minB.get(0).toString)
-        else versions.lastOption.flatMap(readCrawlMin)
-      markerVal.foreach { mv =>
-        val mout = fs.create(new Path(s"$staging/_crawl_min"), true)
-        try mout.write(mv.getBytes("UTF-8")) finally mout.close()
+      // the version's records ride the staging dir so the rename
+      // commits them atomically with the version
+      def record(name: String, text: String): Unit = {
+        val out = fs.create(new Path(s"$staging/$name"), true)
+        try out.write(text.getBytes("UTF-8")) finally out.close()
       }
+      // crawl boundary: an EMPTY batch (null min) carries the prior
+      // boundary forward, the newest-crawl id set did not change
+      minB.map(scalaId(_).toString)
+        .orElse(versions.lastOption.flatMap(readMarker(_, "_crawl_min")))
+        .foreach(record("_crawl_min", _))
+      record("_schema", st.schema.json)
+      // the state's max id: a batch that passed the order guard tops
+      // every state id, so it is the batch's; an empty batch carries
+      // the record forward
+      maxB.map(scalaId(_).toString)
+        .orElse(versions.lastOption.flatMap(readMarker(_, "_state_max")))
+        .foreach(record("_state_max", _))
       if (!fs.rename(staging, new Path(s"$stateDir/v=$vNew")))
         throw new java.io.IOException(s"rename $staging -> v=$vNew failed")
       // mark ownership so a streaming fold refuses this dir (see above)
@@ -655,7 +701,7 @@ object StreamingOps {
         .foreach(v => fs.delete(new Path(s"$stateDir/v=$v"), true))
       // survivors of THIS batch, read from the committed version (never
       // the pre-write lineage): history rows don't re-emit
-      survivorsFrom(vNew)
+      survivorsFrom(vNew, Some(st.schema))
     } finally {
       // drop the entry snapshot's RDD storage: every consumer above
       // eagerly materialized (head/count/localCheckpoint), so nothing
@@ -666,6 +712,35 @@ object StreamingOps {
         case _ => ()
       }
     }
+  }
+
+  /** `df`'s row count and the min and max of `idCol`, in ONE Spark job
+    * with no shuffle (on a lazy checkpoint, the job that fills it). Min
+    * and max are Catalyst values in the column's own ordering, with
+    * nulls skipped as `min`/`max` skip them; None when no id is set.
+    */
+  private def idStats(df: DataFrame, idCol: String)
+      : (Long, Option[Any], Option[Any]) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val t = df.schema(idCol).dataType
+    val ord = org.apache.spark.sql.catalyst.expressions
+      .InterpretedOrdering.forSchema(Seq(t))
+    val parts = df.select(col(idCol)).queryExecution.toRdd
+      .mapPartitions { rows =>
+        var n = 0L
+        var lo, hi: InternalRow = null
+        rows.foreach { r =>
+          n += 1
+          if (!r.isNullAt(0)) {
+            if (lo == null || ord.lt(r, lo)) lo = r.copy()
+            if (hi == null || ord.gt(r, hi)) hi = r.copy()
+          }
+        }
+        Iterator.single((n, Option(lo), Option(hi)))
+      }.collect()
+    (parts.map(_._1).sum,
+      parts.flatMap(_._2).reduceOption(ord.min(_, _)).map(_.get(0, t)),
+      parts.flatMap(_._3).reduceOption(ord.max(_, _)).map(_.get(0, t)))
   }
 
   /** Streaming SEMANTIC dedup (SemDeDup incremental): arriving vectors

@@ -51,6 +51,18 @@ class SizeGateSpec extends SparkSpec {
     } finally cached.unpersist(true)
   }
 
+  test("a probe of a persisted or checkpointed frame runs exactly one Spark job") {
+    val cp = spark.range(0, 1000, 1, 4).toDF("id").localCheckpoint(eager = false)
+    assert(jobsIn(assert(!SizeGate.fits(cp, 10L))) == 1,
+      "filling a lazy checkpoint: one capped-count job, no shuffle, no refill")
+    assert(jobsIn(assert(SizeGate.fits(cp, 1000L))) == 1)
+    val cached = spark.range(0, 1000, 1, 4).toDF("id").selectExpr("id * 2 AS x").persist()
+    try {
+      assert(jobsIn(assert(!SizeGate.fits(cached, 10L))) == 1, "filling a persist")
+      assert(jobsIn(assert(SizeGate.fits(cached, 1000L))) == 1, "reading a filled persist")
+    } finally cached.unpersist(true)
+  }
+
   test("no file in src/main but SizeGate.scala compares a count() against a limit") {
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), s"run from the repo root (no $root)")
