@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.streaming.StateDir
 
 /** Durable, params-pinned index artifacts (round 19 — VERDICT r18
   * task 1). [[graft.GraftSession.cachedArtifact]] amortizes an
@@ -133,9 +134,8 @@ object ArtifactStore {
     // no wait on the age gate) and rethrows
     try build(staging.toString)
     catch { case e: Throwable => fs.delete(staging, true); throw e }
-    val body = params.map { case (k, v) => s"$k=$v" }.mkString("\n")
-    val out = fs.create(new Path(staging, "_artifact_params"), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    StateDir.writeText(fs, new Path(staging, "_artifact_params"),
+      StateDir.format(params))
     if (fs.rename(staging, finalDir)) {
       // ADVICE r19: on filesystems with HDFS rename semantics, a
       // rename onto an ALREADY-COMMITTED finalDir moves staging
@@ -328,18 +328,11 @@ object ArtifactStore {
       : Map[String, String] =
     readParams(fsFor(spark, artifactPath), new Path(artifactPath))
 
-  private def readParams(fs: FileSystem, dir: Path): Map[String, String] = {
-    val pfile = new Path(dir, "_artifact_params")
-    if (!fs.exists(pfile)) throw new IllegalStateException(
-      s"$dir exists but has no _artifact_params — not an ArtifactStore " +
-        "artifact (or a pre-pinning layout); delete it or use a fresh root")
-    val in = fs.open(pfile)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.split('\n').map(_.trim).filter(_.contains('='))
-      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-      .toMap
-  }
+  private def readParams(fs: FileSystem, dir: Path): Map[String, String] =
+    StateDir.parse(StateDir.readText(fs, new Path(dir, "_artifact_params"))
+      .getOrElse(throw new IllegalStateException(
+        s"$dir exists but has no _artifact_params — not an ArtifactStore " +
+          "artifact (or a pre-pinning layout); delete it or use a fresh root")))
 
   private def validateParams(fs: FileSystem, dir: Path,
       requested: Map[String, String], artifactId: String): Unit = {

@@ -1,38 +1,27 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
-/** The iterative graph family's round operator: the two decisions every
-  * fixed-depth round loop makes — how the |V|-bounded side of a round
-  * is joined, and which frames a round keeps materialized — live here
-  * once, so q90/q91/q92/q93/q107/q123, [[Markov.stationaryRanks]] and
-  * the seed-walk artifact cannot drift apart on either.
+/** The iterative graph family's round operator: the decisions every
+  * fixed-depth round loop makes — how the edge frame is laid out and
+  * which frames a round keeps materialized — live here once, so
+  * q90/q91/q92/q93/q107/q123, [[Markov.stationaryRanks]] and the
+  * seed-walk artifact cannot drift apart on them.
+  *
+  * Every round joins its |V|-bounded side (rank, label, survivor,
+  * frontier or walker frame) with an explicit `broadcast` hint: the big
+  * edge frame is persisted partitioned on the round's aggregation key
+  * and broadcast joins preserve that layout, so no round re-exchanges
+  * the edges. The shuffled forms measured slower at sf0.1: q93 5.1 s
+  * against 2.0 s, q90 2.5 s against 1.85 s, the q92 peel 11.8 s against
+  * 3.3 s. As in plain Spark, the hint holds also when a session sets
+  * `spark.sql.autoBroadcastJoinThreshold` to -1 (GraphRoundsSpec).
   *
   * The rounds themselves stay in their callers: every query's round
   * count and integer arithmetic is its own oracle-gated contract.
   */
 object GraphRounds {
-
-  /** The broadcast budget: THE one place a round's |V|-bounded side
-    * (rank, label, survivor, frontier or walker frame) is hinted.
-    * Broadcasting it is the measured-fast form — the big edge frame is
-    * persisted partitioned on the round's aggregation key, broadcast
-    * joins preserve that layout, so no round re-exchanges the edges
-    * (q93 5.1→2.0 s, q90 2.5→1.85 s, q92 11.8→3.3 s at sf0.1). When the
-    * session turns broadcasting off (`spark.sql.autoBroadcastJoinThreshold`
-    * < 0, e.g. because |V| outgrows the driver) the side is hinted
-    * SHUFFLE_HASH instead: the same rows (GraphRoundsSpec runs every
-    * user both ways), with the edge frame re-exchanged each round and no
-    * per-round sort. The setting is read when the round is built.
-    * Unlike plain Spark, where -1 only stops AUTOMATIC broadcasts and
-    * explicit hints still broadcast, -1 here also turns off graft's
-    * round broadcasts, for the slower rounds measured above.
-    */
-  def side(df: DataFrame): DataFrame =
-    if (df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold < 0)
-      df.hint("SHUFFLE_HASH")
-    else broadcast(df)
 
   /** The undirected edge relation of a one-orientation pair frame: the
     * frame plus its (src, dst)-swapped copy (other columns ride along

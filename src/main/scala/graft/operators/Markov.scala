@@ -33,10 +33,10 @@ object Markov {
     val r0 = states.select(col("state"), lit(1000000L).as("rank"))
     val rK = (1 to rounds).foldLeft(r0) { (r, _) =>
       val contrib = t
-        .join(GraphRounds.side(r.withColumnRenamed("state", "src")), "src")
+        .join(broadcast(r.withColumnRenamed("state", "src")), "src")
         .groupBy(col("dst").as("state"))
         .agg(sum(expr("(rank * c) DIV ctot")).as("s"))
-      states.join(GraphRounds.side(contrib), Seq("state"), "left")
+      states.join(broadcast(contrib), Seq("state"), "left")
         .select(col("state"), coalesce(col("s"), lit(0L)).as("rank"))
     }
     rK.select(col("state"), col("rank").as("rank_micro"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.GraphRounds.{Keep, loop, side, undirected}
+import graft.operators.GraphRounds.{Keep, loop, undirected}
 
 /** Shared graph EDGE SCANS for the iterative graph family (round 19 —
   * VERDICT r18 task 5). The seven graph queries each rebuilt a
@@ -197,7 +197,7 @@ object GraphEdges {
       // the dst-partitioned edges (the q126/q135 per-round shape). Each
       // R_k is read twice (next round's relax + the final union).
       val parts = loop(r0, SeedWalkDepth, Keep.ReadTwice) { (f, k) =>
-        edges.join(side(f.select($"node".as("src"), $"seed", $"sigma")), "src")
+        edges.join(broadcast(f.select($"node".as("src"), $"seed", $"sigma")), "src")
           .groupBy($"seed", $"dst".as("node")).agg(sum($"sigma").as("sigma"))
           .select($"seed", $"node", lit(k.toLong).as("dist"), $"sigma")
       }

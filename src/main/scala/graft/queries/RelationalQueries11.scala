@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.GraphRounds.{Keep, loop, side, undirected}
+import graft.operators.GraphRounds.{Keep, loop, undirected}
 
 /** Graph centrality (SURVEY.md §2.1, round 6): PageRank over the
   * customer↔supplier interaction graph (an edge per distinct
@@ -39,11 +39,10 @@ object RelationalQueries11 extends QueryModule {
   /** q92's 4-round k-core peel of an edge frame (both orientations
     * present): each round recomputes degrees, keeps nodes with
     * deg >= k, and semi-joins the edges down to surviving endpoints.
-    * The |V|-bounded survivor set (≤20k longs ≪ |E|) is a round side
-    * ([[graft.operators.GraphRounds.side]]): broadcast, the semi joins
+    * The |V|-bounded survivor set (≤20k longs ≪ |E|) is a broadcast
+    * round side ([[graft.operators.GraphRounds]]): the semi joins
     * preserve the edge frame's src partitioning so no round
-    * re-exchanges it; with broadcasting off the same round re-exchanges
-    * the edges, ~3× slower per round at sf0.1. Survivors persist (two
+    * re-exchanges it. Survivors persist (two
     * sides read them) but are NOT checkpointed: a persist costs no plan
     * compile. Constraint propagation is off while the rounds build
     * (checkpointed constraints go stale — the Dedup CC loop rule).
@@ -60,7 +59,7 @@ object RelationalQueries11 extends QueryModule {
       loop(e0, 4, Keep.TruncateEveryOther) { (e, _) =>
         val keep = e.groupBy($"src").agg(count(lit(1)).as("deg"))
           .filter($"deg" >= k).select($"src".as("node")).persist()
-        def survivors(c: String) = side(keep.select($"node".as(c)))
+        def survivors(c: String) = broadcast(keep.select($"node".as(c)))
         e.join(survivors("src"), Seq("src"), "left_semi")
           .join(survivors("dst"), Seq("dst"), "left_semi")
       }.last
@@ -70,8 +69,8 @@ object RelationalQueries11 extends QueryModule {
   /** q90's 3 PageRank rounds over a one-orientation pair frame:
     * (node, deg, rank) for every node. The edge list is persisted
     * partitioned on DST (the q93 shape): each round takes the
-    * |V|-bounded rank frame as a round side
-    * ([[graft.operators.GraphRounds.side]]; broadcast preserves the dst
+    * |V|-bounded rank frame as a broadcast round side
+    * ([[graft.operators.GraphRounds]]; broadcast preserves the dst
     * partitioning), so the round's dst-keyed contribution sum runs
     * exchange-free against the cached layout at runtime (AQE re-checks
     * requirements per stage once the cache materializes) — no per-round
@@ -88,10 +87,10 @@ object RelationalQueries11 extends QueryModule {
     // the join back onto nd takes the |V|-bounded contributions as a
     // round side too
     (1 to 3).foldLeft(r0) { (rank, _) =>
-      val contrib = edges.join(side(rank.select(col("node").as("src"),
+      val contrib = edges.join(broadcast(rank.select(col("node").as("src"),
           expr("rank div deg").as("c"))), "src")
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      nd.join(side(contrib.withColumnRenamed("dst", "node")),
+      nd.join(broadcast(contrib.withColumnRenamed("dst", "node")),
           Seq("node"), "left")
         .select(col("node"), col("deg"), (lit(150000L) +
           expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("rank"))
@@ -118,7 +117,7 @@ object RelationalQueries11 extends QueryModule {
     // frontier is bit-exact replayable. Scale shape mirrors q90: the
     // edge relation is built once, partitioned on DST (the min's
     // grouping key) and persisted; a round joins the |V|-bounded
-    // frontier as a GraphRounds.side + one partial-aggregated
+    // frontier as a broadcast round side + one partial-aggregated
     // min-groupBy — the frontier frame never exceeds |V| rows, and 4
     // rounds is the fixed-depth contract (BFS diameter knob, same as
     // q70/q90). Broadcasting the frontier against src-partitioned
@@ -139,7 +138,7 @@ object RelationalQueries11 extends QueryModule {
       val d0 = Seq((2L, 0L)).toDF("node", "dist")
       val dFinal = loop(d0, 4, Keep.ReadTwice) { (d, _) =>
         val relaxed = edges
-          .join(side(d.select($"node".as("src"), $"dist")), "src")
+          .join(broadcast(d.select($"node".as("src"), $"dist")), "src")
           .select($"dst".as("node"), ($"dist" + $"w").as("dist"))
         d.union(relaxed)
           .groupBy($"node").agg(min($"dist").as("dist"))

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.operators.GraphRounds.side
 
 /** Round-7 additions: community detection and the SCD2 warehouse
   * primitive.
@@ -16,9 +15,8 @@ import graft.operators.GraphRounds.side
   * tie order, so every round is bit-exact replayable (the float-free
   * graph discipline of q90/q91/q92). Scale shape: edges built once,
   * pre-partitioned on dst and persisted; a round is one join of the
-  * |V|-bounded label frame as a GraphRounds.side (broadcast preserves
-  * the edge partitioning — the q92 lesson; with broadcasting off the
-  * side is SHUFFLE_HASH-hinted) + one (dst,label) partial
+  * |V|-bounded label frame as a broadcast round side (broadcast
+  * preserves the edge partitioning — the q92 lesson) + one (dst,label) partial
   * agg + one argmax partial agg over the ≤|E|-bounded count frame —
   * argmax as `max(struct(cnt, -label))`, decomposable, never a window
   * over the graph. 3 rounds is the fixed-depth contract; lineage grows
@@ -57,7 +55,7 @@ object RelationalQueries12 extends QueryModule {
     // ties to the smallest (integer argmax as a decomposable
     // max(struct)) after the (dst, lbl) count over a round side
     (1 to Rounds).foldLeft(l0) { (labels, _) =>
-      edges.join(side(labels.select(col("node").as("src"), col("lbl"))), "src")
+      edges.join(broadcast(labels.select(col("node").as("src"), col("lbl"))), "src")
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("dst"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))

@@ -159,7 +159,7 @@ object RelationalQueries15 extends QueryModule {
     // Scale shape: the adjacency frame ranks each node's edges once
     // (two windows on the HIGH-cardinality src key the undirected
     // edges are partitioned on) and persists; each step is one
-    // equi-join of the walker frame (a GraphRounds.side) against it —
+    // equi-join of the walker frame (a broadcast round side) against it —
     // walker-bounded work per round, graph touched only by lookup.
     "q107_random_walks" -> { (s, dir) =>
       import s.implicits._
@@ -176,7 +176,7 @@ object RelationalQueries15 extends QueryModule {
         .filter($"node" % 2 === 0 && $"node" <= 100)
         .select($"node".as("walk_id"), $"node".as("cur"))
       val steps = (1 to 4).scanLeft(seeds) { (w, t) =>
-        adj.join(GraphRounds.side(w), adj("src") === w("cur"))
+        adj.join(broadcast(w), adj("src") === w("cur"))
           .filter($"rk" === lit(1L) + pmod(
             $"walk_id" * lit(2654435761L) + $"cur" * lit(40503L) +
               lit(t.toLong) * lit(1013904223L), $"deg"))

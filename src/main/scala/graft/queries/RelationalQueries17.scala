@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.GraphRounds
 
 /** Round-12 relational/event additions.
   *
@@ -212,7 +211,7 @@ object RelationalQueries17 extends QueryModule {
     // (its empirical outgoing edges are ignored by definition).
     // Monotone non-decreasing in k by construction. Scale: the
     // |types|²-bounded kernel is the only state; a round is a join
-    // of a GraphRounds.side + a ≤|types|-group aggregate.
+    // of a broadcast round side + a ≤|types|-group aggregate.
     "q123_absorption" -> { (s, dir) =>
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"us".asc, $"event_id".asc)
@@ -233,10 +232,10 @@ object RelationalQueries17 extends QueryModule {
         when($"state" === "purchase", 1000000L).otherwise(0L).as("p"))
       val pK = (1 to StatRounds).foldLeft(p0) { (p, _) =>
         val reach = trans
-          .join(GraphRounds.side(p.withColumnRenamed("state", "dst")), "dst")
+          .join(broadcast(p.withColumnRenamed("state", "dst")), "dst")
           .groupBy($"src".as("state"))
           .agg(sum($"c" * $"p").as("sp"), max($"ctot").as("ct"))
-        states.join(GraphRounds.side(reach), Seq("state"), "left")
+        states.join(broadcast(reach), Seq("state"), "left")
           .select($"state",
             when($"state" === "purchase", 1000000L)
               .otherwise(coalesce(expr("sp DIV ct"), lit(0L))).as("p"))

@@ -166,23 +166,16 @@ object StreamingOps {
       .option("checkpointLocation", s"$targetDir/_checkpoint")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        val dataDir = s"$targetDir/data"
+        val dir = StateDir(spark, targetDir)
         val staged = batch.dropDuplicates(keyCols)
         val merged =
-          if (new java.io.File(dataDir).exists())
-            spark.read.parquet(dataDir).unionByName(staged)
+          if (dir.exists("data"))
+            spark.read.parquet(dir.path("data")).unionByName(staged)
               .dropDuplicates(keyCols)
           else staged
-        val tmp = s"$targetDir/_staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(); ()
-        }
-        val t = new java.io.File(dataDir)
-        if (t.exists()) rm(t)
-        java.nio.file.Files.move(java.nio.file.Paths.get(tmp), t.toPath)
-        ()
+        merged.write.mode("overwrite").parquet(dir.path("_staging"))
+        dir.delete("data")
+        dir.move("_staging", "data")
       }.start()
 
   /** Stateful sessionization via flatMapGroupsWithState: per-user state
@@ -318,10 +311,7 @@ object StreamingOps {
     */
   private[graft] def bindMinhashParams(spark: SparkSession, stateDir: String,
       params: Seq[(String, String)]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pfile = new Path(s"$stateDir/_minhash_params")
+    val dir = StateDir(spark, stateDir)
     // params pinned over a dir with NO committed state version are
     // STALE (a fold that failed before its first batch commit, or a
     // construction-time pin of a query that never started): no dup
@@ -333,20 +323,11 @@ object StreamingOps {
     // but _pre_* holds REAL committed decisions — treating that
     // window as empty would let a divergent bind overwrite the pin
     // and a later repair+reconcile run coarser banding over it
-    val parkedState = fs.exists(new Path(s"$stateDir/_reconcile_pending")) ||
-      Option(fs.globStatus(new Path(s"$stateDir/_pre_*")))
-        .exists(_.nonEmpty)
+    val parkedState = dir.exists("_reconcile_pending") ||
+      dir.glob("_pre_*").nonEmpty
     val stored: Map[String, String] =
-      if (!fs.exists(pfile) ||
-          (stateVersions(spark, stateDir).isEmpty && !parkedState)) Map.empty
-      else {
-        val in = fs.open(pfile)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        txt.split('\n').map(_.trim).filter(_.contains('='))
-          .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-          .toMap
-      }
+      if (dir.versions.isEmpty && !parkedState) Map.empty
+      else dir.read("_minhash_params").fold(Map.empty[String, String])(StateDir.parse)
     params.foreach { case (k, v) =>
       stored.get(k).foreach { sv =>
         if (sv != v) throw new IllegalStateException(
@@ -357,31 +338,9 @@ object StreamingOps {
             "fresh stateDir.")
       }
     }
-    val merged = stored ++ params.filterNot { case (k, _) => stored.contains(k) }
-    if (merged != stored || stored.isEmpty) {
-      val body = (stored.toSeq ++ params.filterNot { case (k, _) =>
-        stored.contains(k) }).map { case (k, v) => s"$k=$v" }.mkString("\n")
-      val stage = new Path(s"$stateDir/_minhash_params_staging")
-      fs.delete(stage, false)
-      val out = fs.create(stage, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      // rename WITH OVERWRITE (the bindQueryIdentity discipline): a
-      // plain delete-then-rename window would, on a crash between the
-      // two, leave NO params file at all — and an absent file is
-      // exactly what lets a later divergent-banding fold re-pin its
-      // own params instead of being refused
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          pfile.toUri, spark.sparkContext.hadoopConfiguration)
-        fc.rename(stage, pfile,
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          fs.delete(pfile, false) // rename refuses an existing target
-          if (!fs.rename(stage, pfile))
-            throw new java.io.IOException(s"rename $stage -> $pfile failed")
-      }
-    }
+    val added = params.filterNot { case (k, _) => stored.contains(k) }
+    if (added.nonEmpty || stored.isEmpty)
+      dir.replace("_minhash_params", StateDir.format(stored.toSeq ++ added))
   }
 
   /** Batch reconcile of a [[minhashDedupMaintained]] state dir to the
@@ -417,15 +376,11 @@ object StreamingOps {
   def minhashDedupReconcile(spark: SparkSession, stateDir: String,
       numHashes: Int = 128, bands: Int = 0, tauNum: Int = 1,
       tauDen: Int = 2): Unit = {
-    import org.apache.hadoop.fs.Path
     require(spark.streams.active.isEmpty,
       s"minhashDedupReconcile($stateDir) must run at a quiet point: " +
         "stop every streaming query in this session first (the pass " +
         "rewrites the newest state version in place)")
-    val fs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(s"$stateDir/_reconcile_pending")
-    val staging = new Path(s"$stateDir/_reconcile_staging")
+    val dir = StateDir(spark, stateDir)
     // repair a crashed prior attempt before anything else. Repair is
     // TOTAL and MARKER-TEXT-INDEPENDENT: the parked _pre_* dirs are the
     // physical evidence of which version a crashed swap touched, so
@@ -436,32 +391,25 @@ object StreamingOps {
     // "repair" the wrong version and strand the parked pre-image).
     // No pre-image at all means the live version was never touched,
     // so dropping the marker and staging restores the quiet state.
-    if (fs.exists(marker)) {
-      Option(fs.globStatus(new Path(s"$stateDir/_pre_*"))).toSeq.flatten
-        .flatMap(s => s.getPath.getName.stripPrefix("_pre_").toLongOption)
+    if (dir.exists("_reconcile_pending")) {
+      dir.glob("_pre_*").flatMap(_.stripPrefix("_pre_").toLongOption)
         .foreach { v =>
-          val vdir = new Path(s"$stateDir/v=$v")
-          val pre = new Path(s"$stateDir/_pre_$v")
-          if (!fs.exists(vdir) && !fs.rename(pre, vdir))
-            throw new java.io.IOException(s"repair rename $pre -> $vdir failed")
-          fs.delete(pre, true)
+          if (!dir.exists(s"v=$v")) dir.move(s"_pre_$v", s"v=$v")
+          dir.delete(s"_pre_$v")
         }
-      fs.delete(staging, true)
-      fs.delete(marker, false)
+      dir.delete("_reconcile_staging")
+      dir.delete("_reconcile_pending")
     }
     val bandsEff =
       graft.operators.Dedup.effectiveBands(numHashes, bands, tauNum, tauDen)
-    stateVersions(spark, stateDir).lastOption.foreach { v =>
+    dir.versions.lastOption.foreach { v =>
       // pin/validate params only when there IS state to reconcile: a
       // no-op reconcile on an empty dir must not pre-pin its defaults
       // and then refuse the first real fold's differing params
       bindMinhashParams(spark, stateDir, Seq(
         "numHashes" -> numHashes.toString, "bands" -> bandsEff.toString,
         "tau" -> s"$tauNum/$tauDen"))
-      val vdir = new Path(s"$stateDir/v=$v")
-      val pre = new Path(s"$stateDir/_pre_$v")
-      val st = spark.read.parquet(vdir.toString)
-      val sigs = st.select(col("id"), col("sig"))
+      val sigs = dir.version(v).select(col("id"), col("sig"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val pairs = graft.operators.Dedup.sigEstimatePairs(
         sigs, numHashes, bandsEff, tauNum, tauDen)
@@ -472,24 +420,17 @@ object StreamingOps {
           (col("component") =!= col("id")).as("is_dup"))
       // materialize the FULL result into staging before any rename
       // touches the live version
-      fs.delete(staging, true)
-      reconciled.write.mode("overwrite").parquet(staging.toString)
+      dir.delete("_reconcile_staging")
+      reconciled.write.mode("overwrite").parquet(dir.path("_reconcile_staging"))
       sigs.unpersist()
       // staged + renamed: a crash can leave the staging file or no
       // marker at all, never a zero-length marker (and repair above is
       // total even for legacy torn markers)
-      val mstage = new Path(s"$stateDir/_reconcile_pending_staging")
-      fs.delete(mstage, false)
-      val mout = fs.create(mstage, true)
-      try mout.write(v.toString.getBytes("UTF-8")) finally mout.close()
-      if (!fs.rename(mstage, marker))
-        throw new java.io.IOException(s"rename $mstage -> $marker failed")
-      if (!fs.rename(vdir, pre))
-        throw new java.io.IOException(s"rename $vdir -> $pre failed")
-      if (!fs.rename(staging, vdir))
-        throw new java.io.IOException(s"rename $staging -> $vdir failed")
-      fs.delete(pre, true)
-      fs.delete(marker, false)
+      dir.replace("_reconcile_pending", v.toString)
+      dir.move(s"v=$v", s"_pre_$v")
+      dir.move("_reconcile_staging", s"v=$v")
+      dir.delete(s"_pre_$v")
+      dir.delete("_reconcile_pending")
     }
   }
 
@@ -556,48 +497,33 @@ object StreamingOps {
       textCol: String, stateDir: String, mode: String = "word", n: Int = 3,
       bands: Int = 0, tauNum: Int = 1, tauDen: Int = 2,
       retainVersions: Int = 2): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.types.{DataType, StringType, StructType}
     import org.apache.spark.unsafe.types.UTF8String
     import graft.operators.Dedup
     val spark = batch.sparkSession
-    val fs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(s"$stateDir/_reconcile_pending")))
-      throw new IllegalStateException(
-        s"state at $stateDir has an incomplete reconcile pass " +
-          "(_reconcile_pending marker present) — re-run " +
-          "minhashDedupReconcile to repair before folding a snapshot.")
-    if (fs.exists(new Path(s"$stateDir/_checkpoint")))
-      throw new IllegalStateException(
-        s"state at $stateDir was built by a STREAMING fold (it has a " +
-          "_checkpoint): snapshot versioning (last+1) would collide " +
-          "with the stream's batch-id versions and a resumed stream " +
-          "would silently skip a micro-batch. Keep one harness per " +
-          "state dir; to switch to snapshots, copy the newest version " +
-          "into a fresh dir.")
+    val dir = StateDir(spark, stateDir)
+    dir.refuseIf("_reconcile_pending")(
+      s"state at $stateDir has an incomplete reconcile pass " +
+        "(_reconcile_pending marker present) — re-run " +
+        "minhashDedupReconcile to repair before folding a snapshot.")
+    dir.refuseIf("_checkpoint")(
+      s"state at $stateDir was built by a STREAMING fold (it has a " +
+        "_checkpoint): snapshot versioning (last+1) would collide " +
+        "with the stream's batch-id versions and a resumed stream " +
+        "would silently skip a micro-batch. Keep one harness per " +
+        "state dir; to switch to snapshots, copy the newest version " +
+        "into a fresh dir.")
     val bandsEff =
       graft.operators.Dedup.effectiveBands(128, bands, tauNum, tauDen)
     bindMinhashParams(spark, stateDir, Seq(
       "numHashes" -> "128", "bands" -> bandsEff.toString,
       "tau" -> s"$tauNum/$tauDen", "mode" -> mode, "n" -> n.toString))
-    val versions = stateVersions(spark, stateDir)
-    def readMarker(v: Long, name: String): Option[String] = {
-      val m = new Path(s"$stateDir/v=$v/$name")
-      if (!fs.exists(m)) None
-      else {
-        val in = fs.open(m)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        Some(txt).filter(_.nonEmpty)
-      }
-    }
-    // a version read with its recorded schema runs no inference job
-    def readVersion(v: Long, schema: Option[StructType]): DataFrame =
-      schema.fold(spark.read)(spark.read.schema).parquet(s"$stateDir/v=$v")
+    val versions = dir.versions
+    def readMarker(v: Long, name: String): Option[String] =
+      dir.read(s"v=$v/$name").filter(_.nonEmpty)
     val lastSchema = versions.lastOption.flatMap(readMarker(_, "_schema"))
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-    val prev = versions.lastOption.map(readVersion(_, lastSchema))
+    val prev = versions.lastOption.map(dir.version(_, lastSchema))
     // ONE consistent snapshot of the input for the whole guard+fold
     // lifetime: a file-source batch would otherwise be re-scanned by
     // every separate action below (the id pass, replay counts, the
@@ -609,7 +535,7 @@ object StreamingOps {
     try {
       def survivorsFrom(v: Long, schema: Option[StructType]): DataFrame =
         snap.join(
-            readVersion(v, schema).filter(!col("is_dup"))
+            dir.version(v, schema).filter(!col("is_dup"))
               .select(col("id").as(idCol)),
             Seq(idCol), "left_semi")
           .localCheckpoint(true)
@@ -668,37 +594,19 @@ object StreamingOps {
       val st = Dedup.minhashDedupFoldCounted(prev, snap, Some(batchN),
         idCol, textCol, mode, n, 128, bandsEff, tauNum, tauDen)
       val vNew = versions.lastOption.getOrElse(-1L) + 1L
-      val staging = new Path(s"$stateDir/_staging_$vNew")
-      fs.delete(staging, true)
-      st.write.mode("overwrite").parquet(staging.toString)
       // the version's records ride the staging dir so the rename
-      // commits them atomically with the version
-      def record(name: String, text: String): Unit = {
-        val out = fs.create(new Path(s"$staging/$name"), true)
-        try out.write(text.getBytes("UTF-8")) finally out.close()
-      }
-      // crawl boundary: an EMPTY batch (null min) carries the prior
-      // boundary forward, the newest-crawl id set did not change
-      minB.map(scalaId(_).toString)
-        .orElse(versions.lastOption.flatMap(readMarker(_, "_crawl_min")))
-        .foreach(record("_crawl_min", _))
-      record("_schema", st.schema.json)
-      // the state's max id: a batch that passed the order guard tops
-      // every state id, so it is the batch's; an empty batch carries
-      // the record forward
-      maxB.map(scalaId(_).toString)
-        .orElse(versions.lastOption.flatMap(readMarker(_, "_state_max")))
-        .foreach(record("_state_max", _))
-      if (!fs.rename(staging, new Path(s"$stateDir/v=$vNew")))
-        throw new java.io.IOException(s"rename $staging -> v=$vNew failed")
+      // commits them atomically with the version: `_crawl_min` is the
+      // batch's min id and `_state_max` its max (a batch that passed the
+      // order guard tops every state id); an EMPTY batch (null min)
+      // carries the prior records forward
+      def carried(b: Option[Any], name: String) = b.map(scalaId(_).toString)
+        .orElse(versions.lastOption.flatMap(readMarker(_, name))).map(name -> _)
+      dir.commit("v", vNew, carried(minB, "_crawl_min").toSeq ++
+          Seq("_schema" -> st.schema.json) ++ carried(maxB, "_state_max"))(
+        st.write.mode("overwrite").parquet(_))
       // mark ownership so a streaming fold refuses this dir (see above)
-      val owned = new Path(s"$stateDir/_snapshot_owned")
-      if (!fs.exists(owned)) {
-        val out = fs.create(owned, true)
-        try out.write("1".getBytes("UTF-8")) finally out.close()
-      }
-      stateVersions(spark, stateDir).dropRight(retainVersions)
-        .foreach(v => fs.delete(new Path(s"$stateDir/v=$v"), true))
+      dir.createIfAbsent("_snapshot_owned", "1")
+      dir.prune(retainVersions)
       // survivors of THIS batch, read from the committed version (never
       // the pre-write lineage): history rows don't re-emit
       survivorsFrom(vNew, Some(st.schema))
@@ -1079,9 +987,8 @@ object StreamingOps {
     val versions = stateVersions(spark, stateDir)
     if (versions.isEmpty) throw new IllegalStateException(
       s"no committed state versions under $stateDir — nothing to compare")
-    val fs = new org.apache.hadoop.fs.Path(artifactPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$artifactPath/edges")))
+    val artifact = StateDir(spark, artifactPath)
+    if (!artifact.exists("edges"))
       throw new IllegalStateException(
         s"$artifactPath holds no edges — not a committed knn-graph " +
           "artifact (run knnindex or exportKnnGraphArtifact first)")
@@ -1095,8 +1002,7 @@ object StreamingOps {
     // srcs would report a legitimately edge-less member as unexported
     // FOREVER (a false-stale verdict no re-export can clear). The
     // distinct-src fallback only serves pre-members-layout artifacts.
-    val idxNodes = (if (fs.exists(
-        new org.apache.hadoop.fs.Path(s"$artifactPath/members")))
+    val idxNodes = (if (artifact.exists("members"))
       spark.read.parquet(s"$artifactPath/members")
         .select(col("vec_id").as("id"))
     else spark.read.parquet(s"$artifactPath/edges")
@@ -1251,15 +1157,21 @@ object StreamingOps {
       "only row-local rules fold across micro-batches; " +
         "Unique needs distinct-key state (use streamingDedup)")
     versionedStateSink(stream, stateDir, name, retainVersions) { (prev, batch) =>
-      val delta = graft.operators.Quality.audit(batch.toDF(), rules)
-      prev.fold(delta) { p =>
-        val cols = "n_rows" +: rules.map(_.name)
-        p.unionByName(delta)
-          .agg(sum(col(cols.head)).as(cols.head),
-            cols.tail.map(c => sum(col(c)).as(c)): _*)
-      }
+      auditSum(prev, graft.operators.Quality.audit(batch.toDF(), rules), rules)
     }
   }
+
+  /** The cumulative audit after `delta`: row and violation counts are
+    * additive, so the fold is a per-column sum.
+    */
+  private def auditSum(prev: Option[DataFrame], delta: DataFrame,
+      rules: Seq[graft.operators.Quality.Rule]): DataFrame =
+    prev.fold(delta) { p =>
+      val cols = "n_rows" +: rules.map(_.name)
+      p.unionByName(delta)
+        .agg(sum(col(cols.head)).as(cols.head),
+          cols.tail.map(c => sum(col(c)).as(c)): _*)
+    }
 
   /** Streaming dead-letter routing — the streaming face of the batch
     * quality stage's `onViolation: route` (round 17, VERDICT r16
@@ -1296,26 +1208,15 @@ object StreamingOps {
       rules: Seq[graft.operators.Quality.Rule], outDir: String,
       deadLetterPath: String, name: String, retainVersions: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.hadoop.fs.Path
     require(rules.forall(_.rowLocal),
       "only row-local rules fold across micro-batches; " +
         "Unique needs distinct-key state (use streamingDedup)")
     versionedStateSinkById(stream, outDir, name, retainVersions) {
       (prev, batch, id) =>
         val spark = batch.sparkSession
-        val fs = new Path(outDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def writeOnce(df: DataFrame, parent: String): Unit = {
-          val target = new Path(s"$parent/batch=$id")
-          if (!fs.exists(target)) {
-            val staging = new Path(s"$parent/_staging_$id")
-            fs.delete(staging, true) // stale leftover from a crashed attempt
-            df.write.mode("overwrite").parquet(staging.toString)
-            if (!fs.rename(staging, target))
-              throw new java.io.IOException(
-                s"rename $staging -> $target failed")
-          }
-        }
+        def writeOnce(df: DataFrame, parent: String): Unit =
+          StateDir(spark, parent).commit("batch", id)(
+            df.write.mode("overwrite").parquet(_))
         val flagged = graft.operators.Quality.flagRows(batch.toDF(), rules)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val delta = try {
@@ -1328,12 +1229,7 @@ object StreamingOps {
           spark.createDataFrame(
             java.util.Arrays.asList(audit.collect(): _*), audit.schema)
         } finally flagged.unpersist(blocking = true)
-        prev.fold(delta) { p =>
-          val cols = "n_rows" +: rules.map(_.name)
-          p.unionByName(delta)
-            .agg(sum(col(cols.head)).as(cols.head),
-              cols.tail.map(c => sum(col(c)).as(c)): _*)
-        }
+        auditSum(prev, delta, rules)
     }
   }
 
@@ -2154,38 +2050,33 @@ object StreamingOps {
     * stages to `_staging_$id` and atomically renames to
     * `data/batch=$id` — the dir's existence IS the replay marker, so
     * there is no append/marker window; the outDir is bound to the
-    * checkpoint query id ([[bindQueryIdentity]]) and a batch id at or
-    * below the newest written batch whose own dir is absent is refused
-    * as a reset. Readers `spark.read.parquet(outDir + "/data")` — the
+    * checkpoint query id ([[StateDir.bindQueryIdentity]]) and a batch id
+    * at or below the newest written batch whose own dir is absent is
+    * refused as a reset. Readers `spark.read.parquet(outDir + "/data")` — the
     * `batch` partition column carries replay provenance. Scd2EnrichSpec
     * proves the streamed output equals the batch q95 join against the
     * final dimension when the dimension is fed first.
     */
   def scd2EnrichedTo(facts: DataFrame, dimStateDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.hadoop.fs.Path
+      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     facts.writeStream.outputMode("append")
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch(new ((Dataset[org.apache.spark.sql.Row], Long) => Unit) {
         @volatile private var identityChecked = false
         def apply(batch: Dataset[org.apache.spark.sql.Row], id: Long): Unit = {
           val spark = batch.sparkSession
-          val fs = new Path(outDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val data = StateDir(spark, s"$outDir/data")
           if (!identityChecked) {
             // refuse outDirs written by the pre-round-9 flat-append
             // scheme (loose part-files under data/ + _batch_N markers
-            // at the root): enrichedBatches() cannot see those markers,
-            // so resuming here would re-write already-appended batches
-            // (duplicating facts) and leave data/ an unreadable mix of
-            // partitioned and flat children
-            val legacyMarker = Option(fs.globStatus(
-                new Path(s"$outDir/_batch_*"))).exists(_.nonEmpty)
-            val dataDir = new Path(s"$outDir/data")
-            val flatData = fs.exists(dataDir) && fs.listStatus(dataDir)
-              .exists(st => !st.getPath.getName.startsWith("batch=") &&
-                !st.getPath.getName.startsWith("_") &&
-                !st.getPath.getName.startsWith("."))
+            // at the root): the batch=<id> listing cannot see those
+            // markers, so resuming here would re-write already-appended
+            // batches (duplicating facts) and leave data/ an unreadable
+            // mix of partitioned and flat children
+            val out = StateDir(spark, outDir)
+            val legacyMarker = out.glob("_batch_*").nonEmpty
+            val flatData = data.names.exists(n => !n.startsWith("batch=") &&
+              !n.startsWith("_") && !n.startsWith("."))
             if (legacyMarker || flatData)
               throw new IllegalStateException(
                 s"$outDir holds output from the legacy flat-append scd2EnrichedTo " +
@@ -2193,19 +2084,15 @@ object StreamingOps {
                   "with the batch=N layout would duplicate replayed batches. Use a " +
                   "fresh outDir, or migrate each legacy batch into data/batch=<id>/ " +
                   "and delete the _batch_* markers first.")
-            bindQueryIdentity(spark, outDir,
-              enrichedBatches(fs, outDir).nonEmpty)
+            out.bindQueryIdentity(data.ids("batch").nonEmpty)
             identityChecked = true
           }
-          val bdir = new Path(s"$outDir/data/batch=$id")
-          if (!fs.exists(bdir)) { // replayed batch -> already written, skip
-            val newest = enrichedBatches(fs, outDir).lastOption
-            if (newest.exists(id <= _))
-              throw new IllegalStateException(
-                s"batch $id arrived below existing output batch=${newest.get} at " +
-                  s"$outDir but its own batch dir is absent: the streaming checkpoint " +
-                  "was reset while reusing this outDir. Use a fresh outDir (or restore " +
-                  "the original checkpoint) to avoid dropping or duplicating batches.")
+          // a replayed batch is already written: skip
+          if (data.isNew("batch", id)(newest =>
+              s"batch $id arrived below existing output batch=$newest at " +
+                s"$outDir but its own batch dir is absent: the streaming checkpoint " +
+                "was reset while reusing this outDir. Use a fresh outDir (or restore " +
+                "the original checkpoint) to avoid dropping or duplicating batches.")) {
             val dim = latestState(spark, dimStateDir).getOrElse(
               spark.emptyDataFrame
                 .withColumn("user_id", lit(null).cast("long"))
@@ -2213,28 +2100,12 @@ object StreamingOps {
                 .withColumn("version", lit(null).cast("long"))
                 .withColumn("valid_from_us", lit(null).cast("long"))
                 .withColumn("valid_to_us", lit(null).cast("long")))
-            val staging = new Path(s"$outDir/data/_staging_$id")
-            fs.delete(staging, true) // stale leftover from a crashed attempt
-            scd2Enrich(batch.toDF(), dim)
-              .write.mode("overwrite").parquet(staging.toString)
-            if (!fs.rename(staging, bdir))
-              throw new java.io.IOException(s"rename $staging -> $bdir failed")
+            data.commit("batch", id)(
+              scd2Enrich(batch.toDF(), dim).write.mode("overwrite").parquet(_))
           }
           ()
         }
       }).start()
-  }
-
-  /** Written enrichment batch ids under `outDir/data`, ascending. */
-  private def enrichedBatches(fs: org.apache.hadoop.fs.FileSystem,
-      outDir: String): Seq[Long] = {
-    val d = new org.apache.hadoop.fs.Path(s"$outDir/data")
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      .sorted
-  }
 
   /** The versioned exactly-once foreachBatch state harness shared by
     * [[materializedAggregate]] and [[scd2Maintained]]: `fold` merges
@@ -2265,7 +2136,6 @@ object StreamingOps {
       name: String, retainVersions: Int)(
       fold: (Option[DataFrame], Dataset[org.apache.spark.sql.Row], Long) => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.hadoop.fs.Path
     require(retainVersions >= 1)
     // a resubmitted job reuses its name: stale counters from the prior
     // run would misread as this run's refusal pressure
@@ -2289,63 +2159,39 @@ object StreamingOps {
         private def applyInner(batch: Dataset[org.apache.spark.sql.Row],
             id: Long): Unit = {
         val spark = batch.sparkSession
-        val fs = new Path(stateDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // Bind the state to its checkpoint's identity: the checkpoint
-        // metadata carries a stable query id that survives legitimate
-        // restarts but CHANGES when the checkpoint is deleted/replaced.
-        // Without this, a reset whose restarted batch id collides with
-        // a still-retained version dir would be indistinguishable from
-        // a replay and silently swallowed (data never folded).
+        val dir = StateDir(spark, stateDir)
         if (!identityChecked) {
           // a reconcile pass that crashed mid-swap leaves this marker;
           // folding over it could read a below-newest version as
           // "latest" and silently lose the parked pre-image — refuse
           // until the reconcile is re-run (its entry path repairs)
-          if (fs.exists(new Path(s"$stateDir/_reconcile_pending")))
-            throw new IllegalStateException(
-              s"state at $stateDir has an incomplete reconcile pass " +
-                "(_reconcile_pending marker present — a prior " +
-                "minhashDedupReconcile crashed mid-swap). Re-run the " +
-                "reconcile to repair before resuming this stream.")
+          dir.refuseIf("_reconcile_pending")(
+            s"state at $stateDir has an incomplete reconcile pass " +
+              "(_reconcile_pending marker present — a prior " +
+              "minhashDedupReconcile crashed mid-swap). Re-run the " +
+              "reconcile to repair before resuming this stream.")
           // a dir built by batch SNAPSHOT folds versions by last+1,
           // not by batch id: folding a stream over it would read
           // colliding version dirs as replays and silently skip
           // micro-batches — one harness per state dir
-          if (fs.exists(new Path(s"$stateDir/_snapshot_owned")))
-            throw new IllegalStateException(
-              s"state at $stateDir was built by minhashDedupSnapshot " +
-                "(batch snapshot folds): its version numbers are not " +
-                "streaming batch ids, so resuming a stream here would " +
-                "silently skip micro-batches. Use a fresh stateDir " +
-                "(or keep folding snapshots).")
-          bindQueryIdentity(spark, stateDir,
-            stateVersions(spark, stateDir).nonEmpty)
+          dir.refuseIf("_snapshot_owned")(
+            s"state at $stateDir was built by minhashDedupSnapshot " +
+              "(batch snapshot folds): its version numbers are not " +
+              "streaming batch ids, so resuming a stream here would " +
+              "silently skip micro-batches. Use a fresh stateDir " +
+              "(or keep folding snapshots).")
+          dir.bindQueryIdentity(dir.versions.nonEmpty)
           identityChecked = true
         }
-        val vdir = new Path(s"$stateDir/v=$id")
-        if (!fs.exists(vdir)) { // replayed batch -> already folded, skip
-          // A batch id at or below the newest folded version whose own
-          // version dir is GONE means the checkpoint was reset/replaced
-          // while reusing an existing stateDir (batch ids restarted at 0).
-          // Folding would merge a fresh delta into the old state and
-          // silently double-count — refuse instead.
-          val newest = stateVersions(spark, stateDir).lastOption
-          if (newest.exists(id <= _))
-            throw new IllegalStateException(
-              s"batch $id arrived below existing state version v=${newest.get} at $stateDir " +
-                "but its own version dir is absent: the streaming checkpoint was reset while " +
-                "reusing this stateDir. Use a fresh stateDir (or restore the original checkpoint) " +
-                "to avoid double-counting.")
-          val merged = fold(latestState(spark, stateDir, below = id), batch, id)
-          val staging = new Path(s"$stateDir/_staging_$id")
-          fs.delete(staging, true) // stale leftover from a crashed attempt
-          merged.write.mode("overwrite").parquet(staging.toString)
-          if (!fs.rename(staging, vdir))
-            throw new java.io.IOException(s"rename $staging -> $vdir failed")
-          // prune versions older than the newest `retainVersions`
-          stateVersions(spark, stateDir).dropRight(retainVersions)
-            .foreach(v => fs.delete(new Path(s"$stateDir/v=$v"), true))
+        // a replayed batch is already folded: skip
+        if (dir.isNew("v", id)(newest =>
+            s"batch $id arrived below existing state version v=$newest at $stateDir " +
+              "but its own version dir is absent: the streaming checkpoint was reset while " +
+              "reusing this stateDir. Use a fresh stateDir (or restore the original checkpoint) " +
+              "to avoid double-counting.")) {
+          val merged = fold(dir.latest(below = id), batch, id)
+          dir.commit("v", id)(merged.write.mode("overwrite").parquet(_))
+          dir.prune(retainVersions)
           bumpFoldCounter(name, "batches_folded", 1L)
         }
         ()
@@ -2382,107 +2228,18 @@ object StreamingOps {
   private def resetFoldCounters(name: String): Unit =
     foldCountersMap.remove(name)
 
-  /** Bind a state/output directory to its streaming checkpoint's
-    * identity (shared by [[versionedStateSink]] and [[scd2EnrichedTo]]):
-    * the checkpoint metadata carries a stable query id that survives
-    * legitimate restarts but CHANGES when the checkpoint is
-    * deleted/replaced. Without this, a reset whose restarted batch id
-    * collides with still-present state/batch dirs would be
-    * indistinguishable from a replay and silently swallowed (data never
-    * folded/written). Refuses when the stored `_query_id` marker
-    * disagrees with the checkpoint AND `hasState`; otherwise (re)binds
-    * the marker — a marker left behind by a query whose state was since
-    * cleared, or written before a tolerated reset, must follow the NEW
-    * id, or it would brick this very query's next batch. Marker writes
-    * are staged + atomically renamed (FileContext rename-with-overwrite
-    * where supported): a crash mid-create must not leave a torn id that
-    * spuriously trips the check on the next healthy restart.
-    */
-  private def bindQueryIdentity(spark: SparkSession, stateDir: String,
-      hasState: => Boolean): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckId = checkpointQueryId(fs, s"$stateDir/_checkpoint")
-    val marker = new Path(s"$stateDir/_query_id")
-    val prior =
-      if (!fs.exists(marker)) ""
-      else {
-        val in = fs.open(marker)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      }
-    if (prior.nonEmpty && ckId.nonEmpty && prior != ckId && hasState)
-      throw new IllegalStateException(
-        s"state at $stateDir was built by streaming query $prior but this " +
-          s"checkpoint identifies as $ckId: the checkpoint was reset/replaced " +
-          "while reusing the stateDir. Use a fresh stateDir (or restore the " +
-          "original checkpoint) to avoid double-counting.")
-    if (ckId.nonEmpty && prior != ckId) {
-      val mstage = new Path(s"$stateDir/_query_id_staging")
-      fs.delete(mstage, false)
-      val out = fs.create(mstage, true)
-      try out.write(ckId.getBytes("UTF-8")) finally out.close()
-      // A FileSystem without FileContext support degrades to
-      // delete+rename — a crash in that window loses the marker but NOT
-      // safety: the batch-id-below-newest guard still refuses a reset
-      // checkpoint, only this defense-in-depth layer thins.
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          marker.toUri, spark.sparkContext.hadoopConfiguration)
-        fc.rename(mstage, marker,
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          fs.delete(marker, false) // rename refuses an existing target
-          if (!fs.rename(mstage, marker))
-            throw new java.io.IOException(s"rename $mstage -> $marker failed")
-      }
-    }
-  }
-
-  /** The stable query id from a streaming checkpoint's `metadata` file
-    * ({"id":"<uuid>"}) — same across restarts from the same checkpoint,
-    * different once the checkpoint is deleted/replaced. Empty when the
-    * file is missing/unreadable (guard degrades to the version-dir
-    * heuristic rather than failing healthy pipelines).
-    */
-  private def checkpointQueryId(fs: org.apache.hadoop.fs.FileSystem,
-      checkpointDir: String): String = {
-    val meta = new org.apache.hadoop.fs.Path(s"$checkpointDir/metadata")
-    try {
-      if (!fs.exists(meta)) ""
-      else {
-        val in = fs.open(meta)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse("")
-      }
-    } catch { case _: Exception => "" }
-  }
-
   /** Complete state versions, ascending (Hadoop FS — works on any
     * scheme).
     */
-  def stateVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(stateDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .sorted
-  }
+  def stateVersions(spark: SparkSession, stateDir: String): Seq[Long] =
+    StateDir(spark, stateDir).versions
 
   /** The newest complete state version (optionally only versions below
     * a batch id, for in-flight folds).
     */
   def latestState(spark: SparkSession, stateDir: String,
       below: Long = Long.MaxValue): Option[DataFrame] =
-    stateVersions(spark, stateDir).filter(_ < below).lastOption
-      .map(v => spark.read.parquet(s"$stateDir/v=$v"))
+    StateDir(spark, stateDir).latest(below)
 
   /** Arbitrary per-key state via Spark 4's transformWithState — the
     * successor to [flat]mapGroupsWithState: typed state primitives
