@@ -17,9 +17,19 @@ import org.apache.spark.sql.types.StructType
   *    makes a replayed batch a skip.
   *  - small UTF-8 marker files, at the root (`_query_id`,
   *    `_minhash_params` as `key=value` lines, `_reconcile_pending`,
-  *    `_snapshot_owned`) or inside a version (`_crawl_min`,
-  *    `_state_max`, `_schema`). A marker that is rewritten is replaced
-  *    atomically through `<name>_staging`.
+  *    `_snapshot_owned`) or inside a version (`_chain`, `_crawl_min`,
+  *    `_state_max`, `_state_rows`, `_schema`). A marker that is
+  *    rewritten is replaced atomically through `<name>_staging`.
+  *  - base and delta versions. A base holds the whole state. A delta,
+  *    which only an append-only fold writes (one whose existing rows
+  *    never change), holds only the rows its batch added, and its
+  *    `_chain` record names the versions it extends: its parent's
+  *    chain, base first, ending with the parent. The same rename that
+  *    commits the delta's parquet commits that record. The state at a
+  *    version is one parquet scan over its chain; a version without
+  *    the record (every version of a fold that is not append-only, and
+  *    every dir written before deltas existed) is a base, a chain of
+  *    one. Every [[CompactEvery]]th version of a chain is a fresh base.
   *
   * All paths go through the Hadoop FileSystem API, so hdfs:// and
   * s3a:// state dirs behave like local ones. Nothing else in
@@ -29,6 +39,10 @@ private[graft] final class StateDir(spark: SparkSession, val root: String) {
   private val conf = spark.sparkContext.hadoopConfiguration
   private val fs = new Path(root).getFileSystem(conf)
   private def at(name: String) = new Path(s"$root/$name")
+  /** Each version's chain, as read from its `_chain` record or as
+    * committed through this instance: every record is read once.
+    */
+  private val chains = scala.collection.mutable.Map.empty[Long, Seq[Long]]
 
   def path(name: String): String = s"$root/$name"
   def exists(name: String): Boolean = fs.exists(at(name))
@@ -43,10 +57,15 @@ private[graft] final class StateDir(spark: SparkSession, val root: String) {
   def glob(pattern: String): Seq[String] =
     Option(fs.globStatus(at(pattern))).toSeq.flatten.map(_.getPath.getName)
 
-  /** Rename `from` to `to`, which must be absent. */
-  def move(from: String, to: String): Unit =
+  /** Rename `from` to `to`, which must be absent. A moved version dir
+    * may change kind (the reconcile swaps a base in), so the chains
+    * read so far are forgotten.
+    */
+  def move(from: String, to: String): Unit = {
+    chains.clear()
     if (!fs.rename(at(from), at(to)))
       throw new java.io.IOException(s"rename ${at(from)} -> ${at(to)} failed")
+  }
 
   /** A marker's text, untrimmed (only this module writes markers). */
   def read(name: String): Option[String] = StateDir.readText(fs, at(name))
@@ -85,19 +104,73 @@ private[graft] final class StateDir(spark: SparkSession, val root: String) {
 
   def versions: Seq[Long] = ids("v")
 
-  /** Version `v`, read with its recorded schema (no inference job)
-    * when one is given.
+  /** The versions whose rows make up the state at `v`, base first,
+    * ending with `v`: `v` alone for a base.
+    */
+  def chain(v: Long): Seq[Long] = chains.getOrElseUpdate(v,
+    read(s"v=$v/_chain").filter(_.nonEmpty)
+      .fold(Seq.empty[Long])(_.split(',').toSeq.map(_.toLong)) :+ v)
+
+  private def reader(schema: Option[StructType]) =
+    schema.fold(spark.read)(spark.read.schema)
+
+  /** The full state at version `v`: ONE parquet scan over its chain,
+    * read with its recorded schema (no inference job) when one is
+    * given.
     */
   def version(v: Long, schema: Option[StructType] = None): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).parquet(path(s"v=$v"))
+    reader(schema).parquet(chain(v).map(c => path(s"v=$c")): _*)
+
+  /** Only the rows version `v` holds itself: the rows its batch added
+    * for a delta, the whole state for a base.
+    */
+  def ownRows(v: Long, schema: Option[StructType] = None): DataFrame =
+    reader(schema).parquet(path(s"v=$v"))
 
   /** The newest committed version below `below`. */
-  def latest(below: Long = Long.MaxValue): Option[DataFrame] =
-    versions.filter(_ < below).lastOption.map(version(_))
+  def newest(below: Long = Long.MaxValue): Option[Long] =
+    versions.filter(_ < below).lastOption
 
-  /** Drop all but the newest `retain` versions. */
-  def prune(retain: Int): Unit =
-    versions.dropRight(retain).foreach(v => delete(s"v=$v"))
+  /** The full state at the newest committed version below `below`. */
+  def latest(below: Long = Long.MaxValue): Option[DataFrame] =
+    newest(below).map(version(_))
+
+  /** Drop every version that neither is among the newest `retain` nor
+    * is in the chain of one of them. The chains come from the records
+    * this instance has already read or committed (the fold's parent
+    * and its new version); an older retained version's record is read
+    * once.
+    */
+  def prune(retain: Int): Unit = {
+    val vs = versions
+    val needed = vs.takeRight(retain).flatMap(chain).toSet
+    vs.filterNot(needed).foreach(v => delete(s"v=$v"))
+  }
+
+  /** Commit version `v` of a fold over `parent` (the newest version
+    * below `v`, None on the first batch). `state` is the whole new
+    * state. An append-only fold also passes `added`, the rows its batch
+    * appended to `parent`'s state: they are written alone as a delta
+    * extending `parent`'s chain, unless `v` would be the chain's
+    * [[StateDir.CompactEvery]]th version, which compacts it into a
+    * fresh base (`state` is then written, and only then evaluated).
+    * Either way the staged [[commit]] writes it, its `records` and the
+    * `_chain` record of a delta in one rename; false when `v` is
+    * already committed.
+    */
+  def commitFold(v: Long, parent: Option[Long],
+      records: => Seq[(String, String)] = Nil)(
+      state: => DataFrame, added: Option[DataFrame] = None): Boolean = {
+    val delta = for {
+      rows <- added; p <- parent
+      c = chain(p) if c.size < StateDir.CompactEvery
+    } yield (c, rows)
+    val done = commit("v", v,
+        delta.map("_chain" -> _._1.mkString(",")).toSeq ++ records)(
+      delta.fold(state)(_._2).write.mode("overwrite").parquet(_))
+    if (done) chains(v) = delta.fold(Seq.empty[Long])(_._1) :+ v
+    done
+  }
 
   /** The staged commit of `<kind>=<id>`: skipped (false) when it is
     * already committed; otherwise a stale `_staging_<id>` from a crashed
@@ -168,6 +241,18 @@ private[graft] final class StateDir(spark: SparkSession, val root: String) {
 }
 
 private[graft] object StateDir {
+  /** Versions per chain: every 10th version of a chain is a fresh
+    * base, so a state read scans at most 10 version dirs (a base and 9
+    * deltas). 10 is the default of Spark's own state store
+    * (`spark.sql.streaming.stateStore.minDeltasForSnapshot`, deltas per
+    * snapshot). The tradeoff: over 10 batches of `batch` rows onto a
+    * `state`, one base rewrites the state once, a write amplification
+    * of about 1 + state ÷ (10·batch) against 1 + state ÷ batch when
+    * every batch rewrites it; a longer chain cuts the base's share
+    * further and costs more dirs per read.
+    */
+  val CompactEvery = 10
+
   def apply(spark: SparkSession, root: String): StateDir =
     new StateDir(spark, root)
 

@@ -270,8 +270,12 @@ object StreamingOps {
     * is ~1KB/doc signatures, never text). Non-decreasing id arrival is
     * the contract (the scd2Maintained discipline); the exactly-once
     * replay/reset guards are the shared [[versionedStateSink]]
-    * harness. Final state == one fold over everything streamed, proven
-    * in MinhashStreamSpec.
+    * harness. The fold is append-only (a decided row never changes),
+    * so each micro-batch commits only its own rows as a delta version
+    * and a trigger writes O(batch), not O(state); `retainVersions`
+    * keeps the newest versions together with their whole chains.
+    * Final state == one fold over everything streamed, proven in
+    * MinhashStreamSpec and, across a compaction, in StateDirSpec.
     */
   def minhashDedupMaintained(docs: DataFrame, idCol: String,
       textCol: String, stateDir: String, name: String,
@@ -293,9 +297,10 @@ object StreamingOps {
     bindMinhashParams(docs.sparkSession, stateDir, Seq(
       "numHashes" -> "128", "bands" -> bandsEff.toString,
       "tau" -> s"$tauNum/$tauDen", "mode" -> mode, "n" -> n.toString))
-    versionedStateSink(docs, stateDir, name, retainVersions) { (prev, batch) =>
-      graft.operators.Dedup.minhashDedupFold(prev, batch.toDF(), idCol,
-        textCol, mode, n, bands = bandsEff, tauNum = tauNum, tauDen = tauDen)
+    versionedStateSink(docs, stateDir, name, retainVersions,
+        appendOnly = true) { (prev, batch) =>
+      graft.operators.Dedup.minhashDedupFoldCounted(prev, batch.toDF(),
+        None, None, idCol, textCol, mode, n, 128, bandsEff, tauNum, tauDen)
     }
   }
 
@@ -356,13 +361,14 @@ object StreamingOps {
     * identical banding + signature-estimate verify, over signatures
     * already in state — no text needed), making the state equal to
     * what a single batch fold + CC over everything streamed would
-    * produce. The dup set only grows (the fold never marks a component
-    * minimum dup: a smaller-id neighbor implies a smaller component
-    * member). Params must match what the fold ran with (defaults
-    * mirror the fold's) — ENFORCED against the state dir's
-    * `_minhash_params` via [[bindMinhashParams]], not just documented:
-    * a reconcile with coarser banding than the fold used could UNMARK
-    * previously-decided dups.
+    * produce. The pass reads the newest version's full state through
+    * its chain and swaps a base in for it. The dup set only grows (the
+    * fold never marks a component minimum dup: a smaller-id neighbor
+    * implies a smaller component member). Params must match what the
+    * fold ran with (defaults mirror the fold's) — ENFORCED against the
+    * state dir's `_minhash_params` via [[bindMinhashParams]], not just
+    * documented: a reconcile with coarser banding than the fold used
+    * could UNMARK previously-decided dups.
     *
     * Crash discipline: the swap stages through `_reconcile_staging`,
     * parks the pre-image at `_pre_<v>`, and brackets both with a
@@ -437,9 +443,11 @@ object StreamingOps {
   /** BATCH face of [[minhashDedupMaintained]] — cross-snapshot
     * (incremental-crawl) dedup as a pipeline stage: fold ONE batch
     * (crawl N+1) against the pinned state PRIOR SNAPSHOT RUNS built
-    * under `stateDir`, commit the updated state as the next version,
-    * and return the batch's SURVIVORS (rows whose id was not flagged
-    * against history or earlier-in-batch). Shares everything with the
+    * under `stateDir`, commit the batch's decided rows as the next
+    * version (a delta over the newest, or every
+    * [[StateDir.CompactEvery]]th version a base holding the whole
+    * state), and return the batch's SURVIVORS (rows whose id was not
+    * flagged against history or earlier-in-batch). Shares everything with the
     * streaming fold: the state layout (v=N parquet of
     * (id, sig, is_dup)), the `_minhash_params` pin (divergent banding
     * refuses), the pending-reconcile refusal, and
@@ -470,10 +478,10 @@ object StreamingOps {
     * at-or-above-batch-min heuristic, which accepts a suffix-subset
     * replay idempotently (documented legacy behavior). State writes
     * stage through `_staging_<v>` + rename; versions beyond
-    * `retainVersions` prune. The input batch localCheckpoints at
-    * entry so the min-id guard, replay counts, the fold and the
-    * survivor semi-join all see ONE consistent snapshot of a possibly
-    * mutable source directory; the survivors frame eagerly
+    * `retainVersions` prune unless a retained version's chain reads
+    * them. The input batch localCheckpoints at entry so the min-id
+    * guard, replay counts, the fold and the survivor semi-join all see
+    * ONE consistent snapshot of a possibly mutable source directory; the survivors frame eagerly
     * localCheckpoints too (its source version dir is mutable state a
     * LATER snapshot may prune).
     *
@@ -481,17 +489,20 @@ object StreamingOps {
     * batch (the job that fills its checkpoint) gives its row count,
     * which the fold engine takes instead of counting, and its min and
     * max id. Beside `_crawl_min`, each version records the state's max
-    * id (`_state_max`) and the schema it was written with (`_schema`),
-    * both committed by the same rename; an empty batch carries the max
-    * forward. The newest version is read, and the survivors re-read,
-    * with the recorded schema, so no read runs a schema-inference job.
-    * The order guard compares the batch's min id with the recorded max
-    * on the driver. The state is
-    * counted only when the batch reaches at or below that max (the
+    * id (`_state_max`), its row count (`_state_rows`: the parent's
+    * plus the batch's) and the schema it was written with (`_schema`),
+    * all committed by the same rename; an empty batch carries the max
+    * forward. The newest version's state is read, and the survivors
+    * re-read, with the recorded schema, so no read runs a
+    * schema-inference job. The order guard compares the batch's min id
+    * with the recorded max on the driver, and the fold engine takes the
+    * recorded row count instead of probing the state's size. The state
+    * is counted only when the batch reaches at or below that max (the
     * replay-or-refuse path, whose refusal reports the count) or when
     * the newest version records no max (versions written before the
     * record, or a state with no id yet); a version without a recorded
-    * schema is read with inference, as before.
+    * schema is read with inference and one without a recorded row
+    * count is probed, as before.
     */
   def minhashDedupSnapshot(batch: DataFrame, idCol: String,
       textCol: String, stateDir: String, mode: String = "word", n: Int = 3,
@@ -518,12 +529,12 @@ object StreamingOps {
     bindMinhashParams(spark, stateDir, Seq(
       "numHashes" -> "128", "bands" -> bandsEff.toString,
       "tau" -> s"$tauNum/$tauDen", "mode" -> mode, "n" -> n.toString))
-    val versions = dir.versions
-    def readMarker(v: Long, name: String): Option[String] =
-      dir.read(s"v=$v/$name").filter(_.nonEmpty)
-    val lastSchema = versions.lastOption.flatMap(readMarker(_, "_schema"))
+    val last = dir.newest()
+    def readMarker(name: String): Option[String] =
+      last.flatMap(v => dir.read(s"v=$v/$name")).filter(_.nonEmpty)
+    val lastSchema = readMarker("_schema")
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-    val prev = versions.lastOption.map(dir.version(_, lastSchema))
+    val prev = last.map(dir.version(_, lastSchema))
     // ONE consistent snapshot of the input for the whole guard+fold
     // lifetime: a file-source batch would otherwise be re-scanned by
     // every separate action below (the id pass, replay counts, the
@@ -533,9 +544,10 @@ object StreamingOps {
     // checkpoint's first job and fills it.
     val snap = batch.localCheckpoint(false)
     try {
+      // a batch's survivors are among the rows its version holds itself
       def survivorsFrom(v: Long, schema: Option[StructType]): DataFrame =
         snap.join(
-            dir.version(v, schema).filter(!col("is_dup"))
+            dir.ownRows(v, schema).filter(!col("is_dup"))
               .select(col("id").as(idCol)),
             Seq(idCol), "left_semi")
           .localCheckpoint(true)
@@ -552,7 +564,7 @@ object StreamingOps {
         // driver (integral or string ids); the state is counted only for
         // a batch that reaches down to it, or for a version without it
         val stateT = p.schema("id").dataType
-        val atOrBelowMax = readMarker(versions.last, "_state_max").collect {
+        val atOrBelowMax = readMarker("_state_max").collect {
           case m if Dedup.integralId(stateT) && Dedup.integralId(idT) =>
             (v: Any) => v.asInstanceOf[Number].longValue <= m.toLong
           case m if stateT == StringType && idT == StringType =>
@@ -572,7 +584,7 @@ object StreamingOps {
           // overlap and refuses. Legacy versions without the marker
           // fall back to at-or-above-batch-min (suffix-subset replays
           // pass there — see scaladoc).
-          val crawlFloor = readMarker(versions.last, "_crawl_min")
+          val crawlFloor = readMarker("_crawl_min")
             .map(cm => lit(cm).cast(stateT))
             .getOrElse(lit(scalaId(minB.get)))
           val stateIds = p.filter(col("id") >= crawlFloor).select(col("id"))
@@ -581,7 +593,7 @@ object StreamingOps {
             stateIds.unionByName(batchIds).distinct().count() ==
               batchIds.distinct().count() &&
             stateIds.count() == batchIds.distinct().count()
-          if (isReplay) return survivorsFrom(versions.last, lastSchema)
+          if (isReplay) return survivorsFrom(last.get, lastSchema)
           throw new IllegalStateException(
             s"minhashDedupSnapshot($stateDir): batch min id " +
               s"${scalaId(minB.get)} is at or below $overlap already-folded " +
@@ -591,25 +603,31 @@ object StreamingOps {
               "Nothing was folded.")
         }
       }
-      val st = Dedup.minhashDedupFoldCounted(prev, snap, Some(batchN),
-        idCol, textCol, mode, n, 128, bandsEff, tauNum, tauDen)
-      val vNew = versions.lastOption.getOrElse(-1L) + 1L
+      // the state's recorded size settles the engine's small-corpus
+      // gate on the driver; a version without the record is probed
+      val stateRows =
+        if (last.isEmpty) Some(0L) else readMarker("_state_rows").map(_.toLong)
+      val rows = Dedup.minhashDedupFoldCounted(prev, snap, Some(batchN),
+        stateRows, idCol, textCol, mode, n, 128, bandsEff, tauNum, tauDen)
+      val vNew = last.getOrElse(-1L) + 1L
       // the version's records ride the staging dir so the rename
       // commits them atomically with the version: `_crawl_min` is the
       // batch's min id and `_state_max` its max (a batch that passed the
       // order guard tops every state id); an EMPTY batch (null min)
-      // carries the prior records forward
+      // carries the prior records forward. `_state_rows` adds the
+      // batch's rows to the parent's record
       def carried(b: Option[Any], name: String) = b.map(scalaId(_).toString)
-        .orElse(versions.lastOption.flatMap(readMarker(_, name))).map(name -> _)
-      dir.commit("v", vNew, carried(minB, "_crawl_min").toSeq ++
-          Seq("_schema" -> st.schema.json) ++ carried(maxB, "_state_max"))(
-        st.write.mode("overwrite").parquet(_))
+        .orElse(readMarker(name)).map(name -> _)
+      dir.commitFold(vNew, last, carried(minB, "_crawl_min").toSeq ++
+          Seq("_schema" -> rows.schema.json) ++ carried(maxB, "_state_max") ++
+          stateRows.map(r => "_state_rows" -> (r + batchN).toString))(
+        prev.fold(rows)(_.unionByName(rows)), Some(rows))
       // mark ownership so a streaming fold refuses this dir (see above)
       dir.createIfAbsent("_snapshot_owned", "1")
       dir.prune(retainVersions)
       // survivors of THIS batch, read from the committed version (never
       // the pre-write lineage): history rows don't re-emit
-      survivorsFrom(vNew, Some(st.schema))
+      survivorsFrom(vNew, Some(rows.schema))
     } finally {
       // drop the entry snapshot's RDD storage: every consumer above
       // eagerly materialized (head/count/localCheckpoint), so nothing
@@ -2108,21 +2126,28 @@ object StreamingOps {
       }).start()
 
   /** The versioned exactly-once foreachBatch state harness shared by
-    * [[materializedAggregate]] and [[scd2Maintained]]: `fold` merges
-    * the previous complete state (None on the first batch) with the
-    * current micro-batch; the result is written as `v=<batchId>` via
-    * staging + atomic rename. Replayed batches skip their fold (the
-    * version dir already exists), a reset checkpoint over reused state
-    * is refused (both the query-identity marker and the batch-id-below-
-    * newest-version guards), and superseded versions are pruned beyond
-    * `retainVersions`.
+    * every streaming fold ([[materializedAggregate]], [[scd2Maintained]],
+    * [[minhashDedupMaintained]] and the rest): `fold` merges the
+    * previous complete state (None on the first batch, read through
+    * its chain) with the current micro-batch, and the result is
+    * committed as `v=<batchId>` through [[StateDir.commitFold]]'s
+    * staged rename. A fold returns the whole new state and is written
+    * as a base, except an `appendOnly` fold (its existing rows never
+    * change: only the minhash fold so far), which returns only the
+    * batch's new rows and is written as a delta, compacted into a base
+    * every [[StateDir.CompactEvery]] versions. Replayed batches skip
+    * their fold (the version dir already exists), a reset checkpoint
+    * over reused state is refused (both the query-identity marker and
+    * the batch-id-below-newest-version guards), and versions beyond the
+    * newest `retainVersions` are pruned unless a retained version's
+    * chain reads them.
     */
   private def versionedStateSink(stream: DataFrame, stateDir: String,
-      name: String, retainVersions: Int)(
+      name: String, retainVersions: Int, appendOnly: Boolean = false)(
       fold: (Option[DataFrame], Dataset[org.apache.spark.sql.Row]) => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    versionedStateSinkById(stream, stateDir, name, retainVersions)(
-      (prev, batch, _) => fold(prev, batch))
+    versionedStateSinkById(stream, stateDir, name, retainVersions,
+      appendOnly)((prev, batch, _) => fold(prev, batch))
 
   /** [[versionedStateSink]] variant whose fold also receives the
     * micro-batch id — for folds that perform their own idempotent
@@ -2133,7 +2158,7 @@ object StreamingOps {
     * fold, whose side writes skip their already-renamed batch dirs.
     */
   private def versionedStateSinkById(stream: DataFrame, stateDir: String,
-      name: String, retainVersions: Int)(
+      name: String, retainVersions: Int, appendOnly: Boolean = false)(
       fold: (Option[DataFrame], Dataset[org.apache.spark.sql.Row], Long) => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(retainVersions >= 1)
@@ -2189,8 +2214,12 @@ object StreamingOps {
               "but its own version dir is absent: the streaming checkpoint was reset while " +
               "reusing this stateDir. Use a fresh stateDir (or restore the original checkpoint) " +
               "to avoid double-counting.")) {
-          val merged = fold(dir.latest(below = id), batch, id)
-          dir.commit("v", id)(merged.write.mode("overwrite").parquet(_))
+          val parent = dir.newest(below = id)
+          val prev = parent.map(dir.version(_))
+          val out = fold(prev, batch, id)
+          if (appendOnly) dir.commitFold(id, parent)(
+            prev.fold(out)(_.unionByName(out)), Some(out))
+          else dir.commitFold(id, parent)(out)
           dir.prune(retainVersions)
           bumpFoldCounter(name, "batches_folded", 1L)
         }
@@ -2234,8 +2263,9 @@ object StreamingOps {
   def stateVersions(spark: SparkSession, stateDir: String): Seq[Long] =
     StateDir(spark, stateDir).versions
 
-  /** The newest complete state version (optionally only versions below
-    * a batch id, for in-flight folds).
+  /** The full state at the newest complete version (optionally only
+    * versions below a batch id, for in-flight folds): one parquet scan
+    * over its chain, the base and the deltas committed after it.
     */
   def latestState(spark: SparkSession, stateDir: String,
       below: Long = Long.MaxValue): Option[DataFrame] =

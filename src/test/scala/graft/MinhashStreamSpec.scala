@@ -158,4 +158,34 @@ class MinhashStreamSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("bands=64"), e.getMessage)
   }
+
+  test("a reconcile over a chained state equals a reconcile over the one-shot fold's state") {
+    import graft.streaming.{StateDir, StreamingOps}
+    val dir = java.nio.file.Files.createTempDirectory("graft_mhrec").toString
+    val (chained, oneShot) = (s"$dir/chained", s"$dir/oneshot")
+    // three files, oldest first: a base and two deltas
+    val sorted = docs.select(col("doc_id")).collect().map(_.getLong(0)).sorted
+    val Seq(c1, c2) = Seq(1, 2).map(i => sorted(i * sorted.length / 3))
+    Seq(docs.filter(col("doc_id") < c1),
+        docs.filter(col("doc_id") >= c1 && col("doc_id") < c2),
+        docs.filter(col("doc_id") >= c2)).zipWithIndex.foreach { case (b, i) =>
+      b.coalesce(1).write.parquet(s"$dir/in/b$i")
+      new java.io.File(s"$dir/in/b$i").listFiles()
+        .foreach(_.setLastModified(1000000000000L + i * 1000L))
+    }
+    val stream = spark.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$dir/in/*")
+    val q = StreamingOps.minhashDedupMaintained(
+      stream, "doc_id", "text", chained, "mh_reconcile_chain_spec")
+    try q.processAllAvailable() finally q.stop()
+    assert(StateDir(spark, chained).chain(2) == Seq(0L, 1L, 2L))
+    StateDir(spark, oneShot).commit("v", 0)(
+      Dedup.minhashDedupFold(None, docs, "doc_id", "text").write.parquet(_))
+    Seq(chained, oneShot).foreach(StreamingOps.minhashDedupReconcile(spark, _))
+    assert(canon(StreamingOps.latestState(spark, chained).get) ==
+      canon(StreamingOps.latestState(spark, oneShot).get))
+    assert(StateDir(spark, chained).chain(2) == Seq(2L),
+      "the reconcile swaps a base in for the newest version")
+    GraftSession.release(spark)
+  }
 }

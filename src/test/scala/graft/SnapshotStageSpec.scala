@@ -221,22 +221,59 @@ class SnapshotStageSpec extends SparkSpec {
 
   test("a warm snapshot fold of a small batch onto a small state stays at its job floor") {
     // Jobs the fold may run: one id pass over the batch (it also fills
-    // the batch's checkpoint), the history SizeGate probe, the signature
-    // repartition, the signature fill and the single-task sweep, the
-    // state write (broadcast of the decisions + the write) and the
-    // survivor semi-join (broadcast + checkpoint). No schema inference,
-    // no state count and no recount of the batch.
-    val Floor = 9
+    // the batch's checkpoint), the signature repartition, the signature
+    // fill and the single-task sweep, the state write (broadcast of the
+    // decisions + the write) and the survivor semi-join (broadcast +
+    // checkpoint). No schema inference, no state count, no history size
+    // probe (the version records its row count) and no recount of the
+    // batch.
+    val Floor = 8
     val state = freshState("graft_snap_floor")
     val q = docs.agg(expr("(min(doc_id) * 3 + max(doc_id)) DIV 4")).head().getLong(0)
     snapshot(docs.filter(col("doc_id") <= q), state)
     snapshot(docs.filter(col("doc_id") > q && col("doc_id") <= mid), state)
     val jobs = jobsIn(snapshot(upper, state))
     assert(jobs <= Floor, s"a warm snapshot fold ran $jobs Spark jobs, " +
-      s"above its floor of $Floor: the id pass, the history probe, the " +
-      "signature repartition and fill, the sweep, the state write (2) and " +
-      "the survivor semi-join (2); a schema inference, a state count or a " +
-      "batch recount has crept back")
+      s"above its floor of $Floor: the id pass, the signature repartition " +
+      "and fill, the sweep, the state write (2) and the survivor semi-join " +
+      "(2); a schema inference, a state count, a history probe or a batch " +
+      "recount has crept back")
+    GraftSession.release(spark)
+  }
+
+  test("a warm fold onto a chained state runs no more jobs than onto a base") {
+    val q = docs.agg(expr("(min(doc_id) * 3 + max(doc_id)) DIV 4")).head().getLong(0)
+    val (chained, based) = (freshState("graft_snap_chain"), freshState("graft_snap_base"))
+    snapshot(docs.filter(col("doc_id") <= q), chained)
+    snapshot(docs.filter(col("doc_id") > q && col("doc_id") <= mid), chained)
+    snapshot(lower, based)
+    val dir = graft.streaming.StateDir(spark, chained)
+    assert(dir.chain(1) === Seq(0L, 1L) && StreamingOps.stateVersions(spark, based) === Seq(0L))
+    var (outC, outB) = (Option.empty[DataFrame], Option.empty[DataFrame])
+    val jobsChained = jobsIn { outC = Some(snapshot(upper, chained)) }
+    val jobsBased = jobsIn { outB = Some(snapshot(upper, based)) }
+    assert(jobsChained <= jobsBased, s"a fold onto a base and a delta ran " +
+      s"$jobsChained jobs, onto a base alone $jobsBased")
+    assert(ids(outC.get) === ids(outB.get))
+    assert(stateRows(chained) === stateRows(based))
+    GraftSession.release(spark)
+  }
+
+  test("a version without the row-count record probes the state, deciding as before") {
+    val base = java.nio.file.Files.createTempDirectory("graft_snap_rows").toString
+    val (rec, old) = (s"$base/rec", s"$base/old")
+    snapshot(lower, rec)
+    copyDir(rec, old)
+    assert(fs.delete(new Path(s"$old/v=0/_state_rows"), false))
+    var (outRec, outOld) = (Option.empty[DataFrame], Option.empty[DataFrame])
+    val jobsRec = jobsIn { outRec = Some(snapshot(upper, rec)) }
+    val jobsOld = jobsIn { outOld = Some(snapshot(upper, old)) }
+    assert(ids(outOld.get) === ids(outRec.get))
+    assert(stateRows(old) === stateRows(rec))
+    assert(jobsOld === jobsRec + 1, s"the unrecorded version must take the " +
+      s"one-job size probe ($jobsOld jobs vs $jobsRec recorded)")
+    val recorded = scala.io.Source.fromFile(s"$rec/v=1/_state_rows")
+    try assert(recorded.mkString.toLong === docs.count()) finally recorded.close()
     GraftSession.release(spark)
   }
 }
