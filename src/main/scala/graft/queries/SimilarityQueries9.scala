@@ -209,10 +209,13 @@ object SimilarityQueries9 extends QueryModule {
   }
 
   /** The unrolled greedy walk: g_i = argmax of g_{i-1} ∪ its upper
-    * out-neighbors (rn = 1 — the width-1 beam).
+    * out-neighbors (rn = 1 — the width-1 beam). Each step reads the
+    * previous one twice, so every step (and h0 over the last) is
+    * MATERIALIZED: DuckDB would otherwise inline the chain and repeat
+    * the work 2^steps times, which runs the oracle out of memory.
     */
   private def greedyCtes: String = (1 to GreedySteps).map { i =>
-    s"""g$i AS (SELECT q_id, node, c FROM (
+    s"""g$i AS MATERIALIZED (SELECT q_id, node, c FROM (
        |    SELECT q_id, node, c,
        |      row_number() OVER (PARTITION BY q_id
        |        ORDER BY c DESC, node ASC) AS rn
@@ -247,7 +250,7 @@ object SimilarityQueries9 extends QueryModule {
          |    (SELECT uid, uv FROM upper
          |     WHERE uid = (SELECT min(uid) FROM upper)) u),
          |$greedyCtes,
-         |h0 AS (SELECT q_id, node, c FROM (
+         |h0 AS MATERIALIZED (SELECT q_id, node, c FROM (
          |    SELECT q_id, node, c,
          |      row_number() OVER (PARTITION BY q_id
          |        ORDER BY c DESC, node ASC) AS rn

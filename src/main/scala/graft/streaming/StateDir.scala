@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path,
   UnsupportedFileSystemException}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The one owner of graft's on-disk state layout — the streaming folds'
   * versioned state, the batch snapshot fold's state, and the
@@ -111,21 +111,27 @@ private[graft] final class StateDir(spark: SparkSession, val root: String) {
     read(s"v=$v/_chain").filter(_.nonEmpty)
       .fold(Seq.empty[Long])(_.split(',').toSeq.map(_.toLong)) :+ v)
 
-  private def reader(schema: Option[StructType]) =
-    schema.fold(spark.read)(spark.read.schema)
-
-  /** The full state at version `v`: ONE parquet scan over its chain,
-    * read with its recorded schema (no inference job) when one is
-    * given.
+  /** A reader of version `v`'s parquet: with the schema it was
+    * committed with (its `_schema` record, so no inference job), or
+    * inferring for a version written before the record.
     */
-  def version(v: Long, schema: Option[StructType] = None): DataFrame =
-    reader(schema).parquet(chain(v).map(c => path(s"v=$c")): _*)
+  private def reader(v: Long) = read(s"v=$v/_schema").filter(_.nonEmpty)
+    .fold(spark.read)(j => spark.read.schema(DataType.fromJson(j).asInstanceOf[StructType]))
+
+  /** The full state at version `v`: ONE parquet scan over its chain. */
+  def version(v: Long): DataFrame =
+    reader(v).parquet(chain(v).map(c => path(s"v=$c")): _*)
 
   /** Only the rows version `v` holds itself: the rows its batch added
     * for a delta, the whole state for a base.
     */
-  def ownRows(v: Long, schema: Option[StructType] = None): DataFrame =
-    reader(schema).parquet(path(s"v=$v"))
+  def ownRows(v: Long): DataFrame = reader(v).parquet(path(s"v=$v"))
+
+  /** The records version `v` carries but its `_chain`, as
+    * (name, text): what a version swapped in for `v` must carry too.
+    */
+  def records(v: Long): Seq[(String, String)] = glob(s"v=$v/_*")
+    .filterNot(Set("_SUCCESS", "_chain")).flatMap(n => read(s"v=$v/$n").map(n -> _))
 
   /** The newest committed version below `below`. */
   def newest(below: Long = Long.MaxValue): Option[Long] =
@@ -147,6 +153,37 @@ private[graft] final class StateDir(spark: SparkSession, val root: String) {
     vs.filterNot(needed).foreach(v => delete(s"v=$v"))
   }
 
+  /** The one fold step of both fold harnesses, the stream's (`v` is
+    * the batch id) and the snapshot's (`v` is the newest version + 1).
+    * It refuses a dir whose reconcile crashed mid-swap, hands `fold`
+    * the [[StateDir.Parent]] (the newest version below `v`), and
+    * commits what the fold returns as `v` through [[commitFold]], with
+    * the fold's own records, `_state_rows` for an append-only fold (the
+    * parent's count plus the batch's) and `_schema`; then it prunes to
+    * the newest `retain` versions and their chains. A fold returning
+    * None commits nothing (the snapshot's exact replay). True when `v`
+    * was committed.
+    */
+  def foldStep(v: Long, retain: Int)(
+      fold: StateDir.Parent => Option[StateDir.Folded]): Boolean = {
+    // folding over a parked pre-image could read a below-newest version
+    // as the parent and silently lose the parked decisions
+    refuseIf("_reconcile_pending")(s"state at $root has an incomplete " +
+      "reconcile pass (_reconcile_pending marker present — a prior " +
+      "minhashDedupReconcile crashed mid-swap). Re-run the reconcile to " +
+      "repair before folding into it.")
+    val parent = new StateDir.Parent(this, newest(below = v))
+    fold(parent).exists { f =>
+      val done = commitFold(v, parent.version, f.added.map(n =>
+          "_state_rows" -> (parent.rows + n).toString).toSeq ++ f.records)(
+        if (f.added.isEmpty) f.out
+        else parent.state.fold(f.out)(_.unionByName(f.out)),
+        f.added.map(_ => f.out))
+      prune(retain)
+      done
+    }
+  }
+
   /** Commit version `v` of a fold over `parent` (the newest version
     * below `v`, None on the first batch). `state` is the whole new
     * state. An append-only fold also passes `added`, the rows its batch
@@ -154,9 +191,9 @@ private[graft] final class StateDir(spark: SparkSession, val root: String) {
     * extending `parent`'s chain, unless `v` would be the chain's
     * [[StateDir.CompactEvery]]th version, which compacts it into a
     * fresh base (`state` is then written, and only then evaluated).
-    * Either way the staged [[commit]] writes it, its `records` and the
-    * `_chain` record of a delta in one rename; false when `v` is
-    * already committed.
+    * Either way the staged [[commit]] writes it, its `records`, the
+    * `_schema` it was written with and the `_chain` record of a delta
+    * in one rename; false when `v` is already committed.
     */
   def commitFold(v: Long, parent: Option[Long],
       records: => Seq[(String, String)] = Nil)(
@@ -165,9 +202,10 @@ private[graft] final class StateDir(spark: SparkSession, val root: String) {
       rows <- added; p <- parent
       c = chain(p) if c.size < StateDir.CompactEvery
     } yield (c, rows)
-    val done = commit("v", v,
-        delta.map("_chain" -> _._1.mkString(",")).toSeq ++ records)(
-      delta.fold(state)(_._2).write.mode("overwrite").parquet(_))
+    lazy val written = delta.fold(state)(_._2)
+    val done = commit("v", v, delta.map("_chain" -> _._1.mkString(",")).toSeq ++
+        records :+ ("_schema" -> written.schema.json))(
+      written.write.mode("overwrite").parquet(_))
     if (done) chains(v) = delta.fold(Seq.empty[Long])(_._1) :+ v
     done
   }
@@ -252,6 +290,33 @@ private[graft] object StateDir {
     * further and costs more dirs per read.
     */
   val CompactEvery = 10
+
+  /** What [[StateDir.foldStep]] hands a fold: the parent `version`
+    * (the newest below the one being folded; None on a first fold), its
+    * full state read with its recorded schema, its records and its row
+    * count.
+    */
+  final class Parent private[StateDir] (dir: StateDir, val version: Option[Long]) {
+    lazy val state: Option[DataFrame] = version.map(dir.version)
+
+    /** One of the parent's records (None when absent or empty). */
+    def record(name: String): Option[String] =
+      version.flatMap(v => dir.read(s"v=$v/$name")).filter(_.nonEmpty)
+
+    /** The state's row count: its `_state_rows` record, or, for a
+      * version written before the record, a count in one job with no
+      * shuffle (over the column-less scan); 0 with no parent.
+      */
+    lazy val rows: Long = state.fold(0L)(s => record("_state_rows")
+      .fold(s.select().queryExecution.toRdd.count())(_.toLong))
+  }
+
+  /** What a fold returns to [[StateDir.foldStep]]: `out` is the whole
+    * new state, or, for an append-only fold, only the rows its batch
+    * appended, `added` of them; `records` ride the commit.
+    */
+  final case class Folded(out: DataFrame, added: Option[Long] = None,
+      records: Seq[(String, String)] = Nil)
 
   def apply(spark: SparkSession, root: String): StateDir =
     new StateDir(spark, root)

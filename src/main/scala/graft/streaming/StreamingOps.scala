@@ -273,7 +273,10 @@ object StreamingOps {
     * harness. The fold is append-only (a decided row never changes),
     * so each micro-batch commits only its own rows as a delta version
     * and a trigger writes O(batch), not O(state); `retainVersions`
-    * keeps the newest versions together with their whole chains.
+    * keeps the newest versions together with their whole chains. The
+    * parent's recorded row count settles the engine's small-corpus
+    * gate, and the version records it plus the batch count the engine
+    * takes, so a trigger probes no history size.
     * Final state == one fold over everything streamed, proven in
     * MinhashStreamSpec and, across a compaction, in StateDirSpec.
     */
@@ -297,10 +300,12 @@ object StreamingOps {
     bindMinhashParams(docs.sparkSession, stateDir, Seq(
       "numHashes" -> "128", "bands" -> bandsEff.toString,
       "tau" -> s"$tauNum/$tauDen", "mode" -> mode, "n" -> n.toString))
-    versionedStateSink(docs, stateDir, name, retainVersions,
-        appendOnly = true) { (prev, batch) =>
-      graft.operators.Dedup.minhashDedupFoldCounted(prev, batch.toDF(),
-        None, None, idCol, textCol, mode, n, 128, bandsEff, tauNum, tauDen)
+    versionedStateSinkById(docs, stateDir, name, retainVersions) {
+      (parent, batch, _) =>
+        val (rows, batchN) = graft.operators.Dedup.minhashDedupFoldCounted(
+          parent.state, batch.toDF(), None, Some(parent.rows), idCol,
+          textCol, mode, n, 128, bandsEff, tauNum, tauDen)
+        StateDir.Folded(rows, Some(batchN))
     }
   }
 
@@ -428,6 +433,10 @@ object StreamingOps {
       // touches the live version
       dir.delete("_reconcile_staging")
       reconciled.write.mode("overwrite").parquet(dir.path("_reconcile_staging"))
+      // the swapped-in base carries the version's records (only is_dup
+      // flips, so its schema and row count stand), never its `_chain`
+      dir.records(v).foreach { case (name, text) =>
+        dir.createIfAbsent(s"_reconcile_staging/$name", text) }
       sigs.unpersist()
       // staged + renamed: a crash can leave the staging file or no
       // marker at all, never a zero-length marker (and repair above is
@@ -442,18 +451,14 @@ object StreamingOps {
 
   /** BATCH face of [[minhashDedupMaintained]] — cross-snapshot
     * (incremental-crawl) dedup as a pipeline stage: fold ONE batch
-    * (crawl N+1) against the pinned state PRIOR SNAPSHOT RUNS built
-    * under `stateDir`, commit the batch's decided rows as the next
-    * version (a delta over the newest, or every
-    * [[StateDir.CompactEvery]]th version a base holding the whole
-    * state), and return the batch's SURVIVORS (rows whose id was not
-    * flagged against history or earlier-in-batch). Shares everything with the
-    * streaming fold: the state layout (v=N parquet of
-    * (id, sig, is_dup)), the `_minhash_params` pin (divergent banding
-    * refuses), the pending-reconcile refusal, and
-    * [[graft.operators.Dedup.minhashDedupFold]] itself — so
-    * fold(old) + snapshot(new) == batch(old ∪ new) by
-    * CrossSnapshotSpec's equivalence.
+    * (crawl N+1) against the state PRIOR SNAPSHOT RUNS built under
+    * `stateDir` and return the batch's SURVIVORS (rows whose id was not
+    * flagged against history or earlier in the batch). The fold is the
+    * stream's own [[StateDir.foldStep]], at the newest version + 1,
+    * over the same (id, sig, is_dup) layout, `_minhash_params` pin and
+    * [[graft.operators.Dedup.minhashDedupFold]] engine — so fold(old) +
+    * snapshot(new) == batch(old ∪ new) by CrossSnapshotSpec's
+    * equivalence.
     *
     * OWNERSHIP: a state dir belongs to exactly ONE harness. The
     * streaming sink versions by BATCH ID; this versions by last+1 —
@@ -469,54 +474,35 @@ object StreamingOps {
     * committed, or a plan built twice) is detected and returns the
     * committed survivors IDEMPOTENTLY instead of refusing; only a
     * genuinely out-of-order (or partially overlapping) snapshot
-    * refuses. Each committed version carries a `_crawl_min` marker
-    * (the folded batch's min id, renamed atomically with the version)
-    * so the replay check compares against the FULL newest-crawl id
-    * set — a strict suffix-subset of the newest crawl (batch {11}
+    * refuses. Each version records `_crawl_min` (the folded batch's min
+    * id), so the replay check compares against the FULL newest-crawl
+    * id set — a strict suffix-subset of the newest crawl (batch {11}
     * after crawl {10,11}) is partial overlap and REFUSES. Versions
-    * written before the marker existed fall back to the
-    * at-or-above-batch-min heuristic, which accepts a suffix-subset
-    * replay idempotently (documented legacy behavior). State writes
-    * stage through `_staging_<v>` + rename; versions beyond
-    * `retainVersions` prune unless a retained version's chain reads
-    * them. The input batch localCheckpoints at entry so the min-id
-    * guard, replay counts, the fold and the survivor semi-join all see
-    * ONE consistent snapshot of a possibly mutable source directory; the survivors frame eagerly
-    * localCheckpoints too (its source version dir is mutable state a
-    * LATER snapshot may prune).
+    * written before the record fall back to the at-or-above-batch-min
+    * heuristic, which accepts a suffix-subset replay idempotently
+    * (documented legacy behavior). Each version also records the
+    * state's max id (`_state_max`; an empty batch carries both records
+    * forward), so the order guard compares the batch's min id with it
+    * on the driver and counts the state only for a batch that reaches
+    * down to it, or for a version without the record.
     *
-    * What a version already knows is not recounted. ONE pass over the
-    * batch (the job that fills its checkpoint) gives its row count,
-    * which the fold engine takes instead of counting, and its min and
-    * max id. Beside `_crawl_min`, each version records the state's max
-    * id (`_state_max`), its row count (`_state_rows`: the parent's
-    * plus the batch's) and the schema it was written with (`_schema`),
-    * all committed by the same rename; an empty batch carries the max
-    * forward. The newest version's state is read, and the survivors
-    * re-read, with the recorded schema, so no read runs a
-    * schema-inference job. The order guard compares the batch's min id
-    * with the recorded max on the driver, and the fold engine takes the
-    * recorded row count instead of probing the state's size. The state
-    * is counted only when the batch reaches at or below that max (the
-    * replay-or-refuse path, whose refusal reports the count) or when
-    * the newest version records no max (versions written before the
-    * record, or a state with no id yet); a version without a recorded
-    * schema is read with inference and one without a recorded row
-    * count is probed, as before.
+    * The input batch localCheckpoints at entry, and ONE pass over it
+    * (the job that fills the checkpoint) gives its row count and its
+    * min and max id: the guard, the replay counts, the fold and the
+    * survivor semi-join all see one consistent snapshot of a possibly
+    * mutable source directory. The survivors are re-read from the
+    * committed version's own rows and eagerly localCheckpointed (a
+    * LATER snapshot may prune that version).
     */
   def minhashDedupSnapshot(batch: DataFrame, idCol: String,
       textCol: String, stateDir: String, mode: String = "word", n: Int = 3,
       bands: Int = 0, tauNum: Int = 1, tauDen: Int = 2,
       retainVersions: Int = 2): DataFrame = {
-    import org.apache.spark.sql.types.{DataType, StringType, StructType}
+    import org.apache.spark.sql.types.StringType
     import org.apache.spark.unsafe.types.UTF8String
     import graft.operators.Dedup
     val spark = batch.sparkSession
     val dir = StateDir(spark, stateDir)
-    dir.refuseIf("_reconcile_pending")(
-      s"state at $stateDir has an incomplete reconcile pass " +
-        "(_reconcile_pending marker present) — re-run " +
-        "minhashDedupReconcile to repair before folding a snapshot.")
     dir.refuseIf("_checkpoint")(
       s"state at $stateDir was built by a STREAMING fold (it has a " +
         "_checkpoint): snapshot versioning (last+1) would collide " +
@@ -529,12 +515,7 @@ object StreamingOps {
     bindMinhashParams(spark, stateDir, Seq(
       "numHashes" -> "128", "bands" -> bandsEff.toString,
       "tau" -> s"$tauNum/$tauDen", "mode" -> mode, "n" -> n.toString))
-    val last = dir.newest()
-    def readMarker(name: String): Option[String] =
-      last.flatMap(v => dir.read(s"v=$v/$name")).filter(_.nonEmpty)
-    val lastSchema = readMarker("_schema")
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-    val prev = last.map(dir.version(_, lastSchema))
+    val vNew = dir.newest().fold(0L)(_ + 1)
     // ONE consistent snapshot of the input for the whole guard+fold
     // lifetime: a file-source batch would otherwise be re-scanned by
     // every separate action below (the id pass, replay counts, the
@@ -544,90 +525,81 @@ object StreamingOps {
     // checkpoint's first job and fills it.
     val snap = batch.localCheckpoint(false)
     try {
-      // a batch's survivors are among the rows its version holds itself
-      def survivorsFrom(v: Long, schema: Option[StructType]): DataFrame =
-        snap.join(
-            dir.ownRows(v, schema).filter(!col("is_dup"))
-              .select(col("id").as(idCol)),
-            Seq(idCol), "left_semi")
-          .localCheckpoint(true)
-      // the order guard compares ids in the id column's NATIVE
-      // ordering — the same `<` the fold's smaller-id rule uses
-      // (string ids compare lexicographically on both)
-      val idT = snap.schema(idCol).dataType
-      val (batchN, minB, maxB) = idStats(snap, idCol)
-      def scalaId(v: Any) =
-        org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .convertToScala(v, idT)
-      prev.foreach { p =>
-        // the newest version's recorded max id settles the guard on the
-        // driver (integral or string ids); the state is counted only for
-        // a batch that reaches down to it, or for a version without it
-        val stateT = p.schema("id").dataType
-        val atOrBelowMax = readMarker("_state_max").collect {
-          case m if Dedup.integralId(stateT) && Dedup.integralId(idT) =>
-            (v: Any) => v.asInstanceOf[Number].longValue <= m.toLong
-          case m if stateT == StringType && idT == StringType =>
-            (v: Any) => v.asInstanceOf[UTF8String]
-              .compareTo(UTF8String.fromString(m)) <= 0
-        }
-        val overlap = minB match {
-          case Some(mb) if atOrBelowMax.forall(_(mb)) =>
-            p.filter(col("id") >= lit(scalaId(mb))).count()
-          case _ => 0L
-        }
-        if (overlap > 0) {
+      val folded = dir.foldStep(vNew, retainVersions) { parent =>
+        // the order guard compares ids in the id column's NATIVE
+        // ordering — the same `<` the fold's smaller-id rule uses
+        // (string ids compare lexicographically on both)
+        val idT = snap.schema(idCol).dataType
+        val (batchN, minB, maxB) = idStats(snap, idCol)
+        def scalaId(v: Any) =
+          org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .convertToScala(v, idT)
+        val replay = parent.state.exists { p =>
+          // the parent's recorded max id settles the guard on the
+          // driver (integral or string ids); the state is counted only
+          // for a batch that reaches down to it, or without the record
+          val stateT = p.schema("id").dataType
+          val atOrBelowMax = parent.record("_state_max").collect {
+            case m if Dedup.integralId(stateT) && Dedup.integralId(idT) =>
+              (v: Any) => v.asInstanceOf[Number].longValue <= m.toLong
+            case m if stateT == StringType && idT == StringType =>
+              (v: Any) => v.asInstanceOf[UTF8String]
+                .compareTo(UTF8String.fromString(m)) <= 0
+          }
+          val overlap = minB match {
+            case Some(mb) if atOrBelowMax.forall(_(mb)) =>
+              p.filter(col("id") >= lit(scalaId(mb))).count()
+            case _ => 0L
+          }
           // exact re-run of the NEWEST committed crawl? -> idempotent:
-          // return its survivors, fold nothing. The newest crawl's id
-          // set is everything at-or-above its committed _crawl_min
-          // marker; a batch matching only a SUFFIX of it is partial
-          // overlap and refuses. Legacy versions without the marker
-          // fall back to at-or-above-batch-min (suffix-subset replays
-          // pass there — see scaladoc).
-          val crawlFloor = readMarker("_crawl_min")
-            .map(cm => lit(cm).cast(stateT))
-            .getOrElse(lit(scalaId(minB.get)))
-          val stateIds = p.filter(col("id") >= crawlFloor).select(col("id"))
-          val batchIds = snap.select(col(idCol).as("id"))
-          val isReplay =
-            stateIds.unionByName(batchIds).distinct().count() ==
-              batchIds.distinct().count() &&
-            stateIds.count() == batchIds.distinct().count()
-          if (isReplay) return survivorsFrom(last.get, lastSchema)
-          throw new IllegalStateException(
-            s"minhashDedupSnapshot($stateDir): batch min id " +
-              s"${scalaId(minB.get)} is at or below $overlap already-folded " +
-              "state id(s) and the batch is NOT an exact re-run of the " +
-              "newest crawl — snapshots must arrive in non-decreasing " +
-              "id order (the fold's smaller-id-decided contract). " +
-              "Nothing was folded.")
+          // fold nothing. The newest crawl's id set is everything
+          // at-or-above its `_crawl_min`; a batch matching only a
+          // SUFFIX of it is partial overlap and refuses. Versions
+          // without the record fall back to at-or-above-batch-min
+          // (suffix-subset replays pass there — see scaladoc).
+          overlap > 0 && {
+            val crawlFloor = parent.record("_crawl_min")
+              .map(cm => lit(cm).cast(stateT))
+              .getOrElse(lit(scalaId(minB.get)))
+            val stateIds = p.filter(col("id") >= crawlFloor).select(col("id"))
+            val batchIds = snap.select(col(idCol).as("id"))
+            val isReplay =
+              stateIds.unionByName(batchIds).distinct().count() ==
+                batchIds.distinct().count() &&
+              stateIds.count() == batchIds.distinct().count()
+            if (!isReplay) throw new IllegalStateException(
+              s"minhashDedupSnapshot($stateDir): batch min id " +
+                s"${scalaId(minB.get)} is at or below $overlap already-folded " +
+                "state id(s) and the batch is NOT an exact re-run of the " +
+                "newest crawl — snapshots must arrive in non-decreasing " +
+                "id order (the fold's smaller-id-decided contract). " +
+                "Nothing was folded.")
+            true
+          }
+        }
+        Option.when(!replay) {
+          // the engine takes the batch count and the parent's recorded
+          // size instead of counting and probing
+          val (rows, _) = Dedup.minhashDedupFoldCounted(parent.state, snap,
+            Some(batchN), Some(parent.rows), idCol, textCol, mode, n, 128,
+            bandsEff, tauNum, tauDen)
+          // `_crawl_min` is the batch's min id and `_state_max` its max
+          // (a batch that passed the order guard tops every state id);
+          // an EMPTY batch (null min) carries the parent's forward
+          def carried(b: Option[Any], name: String) = b
+            .map(scalaId(_).toString).orElse(parent.record(name)).map(name -> _)
+          StateDir.Folded(rows, Some(batchN),
+            carried(minB, "_crawl_min").toSeq ++ carried(maxB, "_state_max"))
         }
       }
-      // the state's recorded size settles the engine's small-corpus
-      // gate on the driver; a version without the record is probed
-      val stateRows =
-        if (last.isEmpty) Some(0L) else readMarker("_state_rows").map(_.toLong)
-      val rows = Dedup.minhashDedupFoldCounted(prev, snap, Some(batchN),
-        stateRows, idCol, textCol, mode, n, 128, bandsEff, tauNum, tauDen)
-      val vNew = last.getOrElse(-1L) + 1L
-      // the version's records ride the staging dir so the rename
-      // commits them atomically with the version: `_crawl_min` is the
-      // batch's min id and `_state_max` its max (a batch that passed the
-      // order guard tops every state id); an EMPTY batch (null min)
-      // carries the prior records forward. `_state_rows` adds the
-      // batch's rows to the parent's record
-      def carried(b: Option[Any], name: String) = b.map(scalaId(_).toString)
-        .orElse(readMarker(name)).map(name -> _)
-      dir.commitFold(vNew, last, carried(minB, "_crawl_min").toSeq ++
-          Seq("_schema" -> rows.schema.json) ++ carried(maxB, "_state_max") ++
-          stateRows.map(r => "_state_rows" -> (r + batchN).toString))(
-        prev.fold(rows)(_.unionByName(rows)), Some(rows))
       // mark ownership so a streaming fold refuses this dir (see above)
       dir.createIfAbsent("_snapshot_owned", "1")
-      dir.prune(retainVersions)
-      // survivors of THIS batch, read from the committed version (never
-      // the pre-write lineage): history rows don't re-emit
-      survivorsFrom(vNew, Some(rows.schema))
+      // survivors of THIS batch (an exact replay: of the newest crawl,
+      // vNew - 1), read from the rows its committed version holds
+      // itself, never the pre-write lineage: history rows don't re-emit
+      snap.join(dir.ownRows(if (folded) vNew else vNew - 1)
+          .filter(!col("is_dup")).select(col("id").as(idCol)), Seq(idCol), "left_semi")
+        .localCheckpoint(true)
     } finally {
       // drop the entry snapshot's RDD storage: every consumer above
       // eagerly materialized (head/count/localCheckpoint), so nothing
@@ -1247,7 +1219,7 @@ object StreamingOps {
           spark.createDataFrame(
             java.util.Arrays.asList(audit.collect(): _*), audit.schema)
         } finally flagged.unpersist(blocking = true)
-        auditSum(prev, delta, rules)
+        StateDir.Folded(auditSum(prev.state, delta, rules))
     }
   }
 
@@ -2112,12 +2084,9 @@ object StreamingOps {
                 "was reset while reusing this outDir. Use a fresh outDir (or restore " +
                 "the original checkpoint) to avoid dropping or duplicating batches.")) {
             val dim = latestState(spark, dimStateDir).getOrElse(
-              spark.emptyDataFrame
-                .withColumn("user_id", lit(null).cast("long"))
-                .withColumn("event_type", lit(null).cast("string"))
-                .withColumn("version", lit(null).cast("long"))
-                .withColumn("valid_from_us", lit(null).cast("long"))
-                .withColumn("valid_to_us", lit(null).cast("long")))
+              spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+                org.apache.spark.sql.types.StructType.fromDDL("user_id long, " +
+                  "event_type string, version long, valid_from_us long, valid_to_us long")))
             data.commit("batch", id)(
               scd2Enrich(batch.toDF(), dim).write.mode("overwrite").parquet(_))
           }
@@ -2126,40 +2095,37 @@ object StreamingOps {
       }).start()
 
   /** The versioned exactly-once foreachBatch state harness shared by
-    * every streaming fold ([[materializedAggregate]], [[scd2Maintained]],
-    * [[minhashDedupMaintained]] and the rest): `fold` merges the
-    * previous complete state (None on the first batch, read through
-    * its chain) with the current micro-batch, and the result is
-    * committed as `v=<batchId>` through [[StateDir.commitFold]]'s
-    * staged rename. A fold returns the whole new state and is written
-    * as a base, except an `appendOnly` fold (its existing rows never
-    * change: only the minhash fold so far), which returns only the
-    * batch's new rows and is written as a delta, compacted into a base
-    * every [[StateDir.CompactEvery]] versions. Replayed batches skip
-    * their fold (the version dir already exists), a reset checkpoint
-    * over reused state is refused (both the query-identity marker and
-    * the batch-id-below-newest-version guards), and versions beyond the
-    * newest `retainVersions` are pruned unless a retained version's
-    * chain reads them.
+    * every streaming fold ([[materializedAggregate]], [[scd2Maintained]]
+    * and the rest): `fold` merges the previous complete state (None on
+    * the first batch) with the current micro-batch and returns the
+    * whole new state, committed as the base version `v=<batchId>`.
     */
   private def versionedStateSink(stream: DataFrame, stateDir: String,
-      name: String, retainVersions: Int, appendOnly: Boolean = false)(
+      name: String, retainVersions: Int)(
       fold: (Option[DataFrame], Dataset[org.apache.spark.sql.Row]) => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    versionedStateSinkById(stream, stateDir, name, retainVersions,
-      appendOnly)((prev, batch, _) => fold(prev, batch))
+    versionedStateSinkById(stream, stateDir, name, retainVersions)(
+      (prev, batch, _) => StateDir.Folded(fold(prev.state, batch)))
 
-  /** [[versionedStateSink]] variant whose fold also receives the
-    * micro-batch id — for folds that perform their own idempotent
-    * per-batch side writes (`batch=<id>` staged dirs, the
-    * scd2EnrichedTo discipline) BEFORE the state version rename:
-    * a replayed batch skips the fold entirely (its `v=<id>` exists),
-    * and a crash between the side write and the rename re-runs the
-    * fold, whose side writes skip their already-renamed batch dirs.
+  /** The harness itself: each micro-batch is one
+    * [[StateDir.foldStep]] at version `v=<batchId>`, which refuses a
+    * pending reconcile, reads the parent with its recorded schema,
+    * commits what `fold` returns with its records and prunes to the
+    * newest `retainVersions` versions and their chains. An append-only
+    * fold ([[minhashDedupMaintained]]) returns only its batch's rows and
+    * their count, and gets a delta version. What is the stream's own:
+    * a replayed batch skips its fold (its version dir exists), and a
+    * reset checkpoint over reused state is refused (the query-identity
+    * marker and the batch-id-below-newest-version guards), as is a dir
+    * that snapshot folds own. `fold` also receives the batch id, for
+    * folds that make their own idempotent per-batch side writes
+    * (`batch=<id>` staged dirs) BEFORE the version rename: a crash
+    * between the two re-runs the fold, whose side writes skip their
+    * already-renamed dirs.
     */
   private def versionedStateSinkById(stream: DataFrame, stateDir: String,
-      name: String, retainVersions: Int, appendOnly: Boolean = false)(
-      fold: (Option[DataFrame], Dataset[org.apache.spark.sql.Row], Long) => DataFrame)
+      name: String, retainVersions: Int)(
+      fold: (StateDir.Parent, Dataset[org.apache.spark.sql.Row], Long) => StateDir.Folded)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(retainVersions >= 1)
     // a resubmitted job reuses its name: stale counters from the prior
@@ -2171,59 +2137,38 @@ object StreamingOps {
         // the identity check is constant for a query run: do the FS
         // round-trips (checkpoint metadata + marker) once, not per batch
         @volatile private var identityChecked = false
-        def apply(batch: Dataset[org.apache.spark.sql.Row], id: Long): Unit =
-          try applyInner(batch, id)
-          catch {
-            // every loud contract refusal (late data, checkpoint reset,
-            // pending reconcile, divergent params) passes through here:
-            // count it so an operator watching the REST progress
-            // endpoint sees refusal pressure, not just a dead query
-            case e: IllegalStateException =>
-              bumpFoldCounter(name, "refusals", 1L); throw e
+        def apply(batch: Dataset[org.apache.spark.sql.Row], id: Long): Unit = try {
+          val dir = StateDir(batch.sparkSession, stateDir)
+          if (!identityChecked) {
+            // a dir built by batch SNAPSHOT folds versions by last+1,
+            // not by batch id: folding a stream over it would read
+            // colliding version dirs as replays and silently skip
+            // micro-batches — one harness per state dir
+            dir.refuseIf("_snapshot_owned")(
+              s"state at $stateDir was built by minhashDedupSnapshot " +
+                "(batch snapshot folds): its version numbers are not " +
+                "streaming batch ids, so resuming a stream here would " +
+                "silently skip micro-batches. Use a fresh stateDir " +
+                "(or keep folding snapshots).")
+            dir.bindQueryIdentity(dir.versions.nonEmpty)
+            identityChecked = true
           }
-        private def applyInner(batch: Dataset[org.apache.spark.sql.Row],
-            id: Long): Unit = {
-        val spark = batch.sparkSession
-        val dir = StateDir(spark, stateDir)
-        if (!identityChecked) {
-          // a reconcile pass that crashed mid-swap leaves this marker;
-          // folding over it could read a below-newest version as
-          // "latest" and silently lose the parked pre-image — refuse
-          // until the reconcile is re-run (its entry path repairs)
-          dir.refuseIf("_reconcile_pending")(
-            s"state at $stateDir has an incomplete reconcile pass " +
-              "(_reconcile_pending marker present — a prior " +
-              "minhashDedupReconcile crashed mid-swap). Re-run the " +
-              "reconcile to repair before resuming this stream.")
-          // a dir built by batch SNAPSHOT folds versions by last+1,
-          // not by batch id: folding a stream over it would read
-          // colliding version dirs as replays and silently skip
-          // micro-batches — one harness per state dir
-          dir.refuseIf("_snapshot_owned")(
-            s"state at $stateDir was built by minhashDedupSnapshot " +
-              "(batch snapshot folds): its version numbers are not " +
-              "streaming batch ids, so resuming a stream here would " +
-              "silently skip micro-batches. Use a fresh stateDir " +
-              "(or keep folding snapshots).")
-          dir.bindQueryIdentity(dir.versions.nonEmpty)
-          identityChecked = true
-        }
-        // a replayed batch is already folded: skip
-        if (dir.isNew("v", id)(newest =>
-            s"batch $id arrived below existing state version v=$newest at $stateDir " +
-              "but its own version dir is absent: the streaming checkpoint was reset while " +
-              "reusing this stateDir. Use a fresh stateDir (or restore the original checkpoint) " +
-              "to avoid double-counting.")) {
-          val parent = dir.newest(below = id)
-          val prev = parent.map(dir.version(_))
-          val out = fold(prev, batch, id)
-          if (appendOnly) dir.commitFold(id, parent)(
-            prev.fold(out)(_.unionByName(out)), Some(out))
-          else dir.commitFold(id, parent)(out)
-          dir.prune(retainVersions)
-          bumpFoldCounter(name, "batches_folded", 1L)
-        }
-        ()
+          // a replayed batch is already folded: skip
+          if (dir.isNew("v", id)(newest =>
+              s"batch $id arrived below existing state version v=$newest at $stateDir " +
+                "but its own version dir is absent: the streaming checkpoint was reset while " +
+                "reusing this stateDir. Use a fresh stateDir (or restore the original checkpoint) " +
+                "to avoid double-counting.")) {
+            dir.foldStep(id, retainVersions)(p => Some(fold(p, batch, id)))
+            bumpFoldCounter(name, "batches_folded", 1L)
+          }
+        } catch {
+          // every loud contract refusal (late data, checkpoint reset,
+          // pending reconcile, divergent params) passes through here:
+          // count it so an operator watching the REST progress endpoint
+          // sees refusal pressure, not just a dead query
+          case e: IllegalStateException =>
+            bumpFoldCounter(name, "refusals", 1L); throw e
         }
       }).start()
   }
@@ -2263,13 +2208,13 @@ object StreamingOps {
   def stateVersions(spark: SparkSession, stateDir: String): Seq[Long] =
     StateDir(spark, stateDir).versions
 
-  /** The full state at the newest complete version (optionally only
-    * versions below a batch id, for in-flight folds): one parquet scan
-    * over its chain, the base and the deltas committed after it.
+  /** The full state at the newest complete version: one parquet scan
+    * over its chain, the base and the deltas committed after it, read
+    * with the version's recorded schema (with inference for a version
+    * written before the record).
     */
-  def latestState(spark: SparkSession, stateDir: String,
-      below: Long = Long.MaxValue): Option[DataFrame] =
-    StateDir(spark, stateDir).latest(below)
+  def latestState(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    StateDir(spark, stateDir).latest()
 
   /** Arbitrary per-key state via Spark 4's transformWithState — the
     * successor to [flat]mapGroupsWithState: typed state primitives

@@ -181,11 +181,19 @@ class MinhashStreamSpec extends SparkSpec {
     assert(StateDir(spark, chained).chain(2) == Seq(0L, 1L, 2L))
     StateDir(spark, oneShot).commit("v", 0)(
       Dedup.minhashDedupFold(None, docs, "doc_id", "text").write.parquet(_))
+    val recorded = StateDir(spark, chained).records(2).toMap
+    assert(recorded.keySet == Set("_schema", "_state_rows"), recorded.keySet)
     Seq(chained, oneShot).foreach(StreamingOps.minhashDedupReconcile(spark, _))
     assert(canon(StreamingOps.latestState(spark, chained).get) ==
       canon(StreamingOps.latestState(spark, oneShot).get))
     assert(StateDir(spark, chained).chain(2) == Seq(2L),
       "the reconcile swaps a base in for the newest version")
+    // the swapped-in base keeps the version's records: only is_dup
+    // flipped, so its schema and row count stand
+    val after = StateDir(spark, chained)
+    assert(!after.exists("v=2/_chain"))
+    assert(after.records(2).toMap == recorded)
+    assert(recorded("_state_rows") == docs.count().toString)
     GraftSession.release(spark)
   }
 }

@@ -30,16 +30,22 @@ class StateDirSpec extends SparkSpec {
   test("no file in graft/streaming but StateDir.scala renames or creates a file") {
     val root = Paths.get("src/main/scala/graft/streaming")
     assert(Files.isDirectory(root), s"run from the repo root (no $root)")
-    val handWritten = """\.rename\(|fs\.create\(""".r
     val walk = Files.walk(root)
-    val found = try walk.iterator().asScala
+    val sources = try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala") &&
         p.getFileName.toString != "StateDir.scala")
-      .filter(p => handWritten.findFirstIn(Files.readString(p)).nonEmpty)
-      .map(root.relativize(_: Path).toString).toSeq.sorted
+      .map(p => root.relativize(p: Path).toString -> Files.readString(p))
+      .toSeq.sortBy(_._1)
     finally walk.close()
+    def matching(pattern: scala.util.matching.Regex): Seq[String] =
+      sources.collect { case (f, text) if pattern.findFirstIn(text).nonEmpty => f }
+    val found = matching("""\.rename\(|fs\.create\(""".r)
     assert(found.isEmpty,
       s"commit state, markers and listings through StateDir, not in: ${found.mkString(", ")}")
+    // a fold's version is committed and pruned by StateDir.foldStep only
+    val folding = matching("""commitFold\(|\.prune\(""".r)
+    assert(folding.isEmpty,
+      s"fold through StateDir.foldStep, not by hand in: ${folding.mkString(", ")}")
   }
 
   test("commit clears a stale _staging_<id> left by a crashed attempt") {
