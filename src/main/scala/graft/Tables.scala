@@ -11,15 +11,15 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.parquet(spark)(s"$dir/$name.parquet")
 
   /** Session-memoized table row count. Scale guards (q116's ntile
     * ceiling, q110's KLL exact-regime switch) need the count on every
-    * invocation; it is parquet-footer-cheap but still a scheduling
-    * round-trip inside every timed benchmark pass. The benchmark/test
-    * dirs are immutable, so the count rides the session model cache
-    * (GraftSession.cachedModel — see its scaladoc for the
-    * invalidation contract).
+    * invocation; `count()` over parquet reads only footers, but it is
+    * still a Spark job (one task per file split) inside every timed
+    * benchmark pass. The benchmark/test dirs are immutable, so the
+    * count rides the session model cache (GraftSession.cachedModel —
+    * see its scaladoc for the invalidation contract).
     */
   def rowCount(spark: SparkSession, dir: String, name: String): Long =
     graft.GraftSession.cachedModel(s"rowcount:$name", dir)(
@@ -33,7 +33,7 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
+    normalizeEventTs(load(spark, dir, "events"))
   }
 
   /** Schema-dispatched normalization of `ts` to the engine's native

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** Partition-wise incremental backfill — reprocessing discipline for a
   * partitioned lake: diff the source's partition values against the
@@ -48,7 +49,7 @@ object Backfill {
       partCol: String)(transform: DataFrame => DataFrame): Seq[String] = {
     val todo = missing(spark, srcDir, dstDir, partCol)
     if (todo.nonEmpty) {
-      val src = spark.read.parquet(srcDir)
+      val src = Sources.parquet(spark)(srcDir)
         .filter(col(partCol).isin(todo: _*))
       transform(src)
         .write.mode("append").partitionBy(partCol).parquet(dstDir)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.cosine_sim
+import graft.sources.Sources
 
 /** SERVE the pinned k-NN-graph artifact (round 20 — VERDICT r19
   * task 2: `knnindex` builds the durable index, nothing executed a
@@ -117,7 +118,7 @@ object KnnServe {
         s"must hold (vec_id, embedding) columns, got ${src.columns.mkString(", ")}")
     val (cen, cenDesc) = p.centroidsPath match {
       case Some(cp) =>
-        val c = spark.read.parquet(cp)
+        val c = Sources.parquet(spark)(cp)
         require(Set("cid", "cv").subsetOf(c.columns.toSet),
           s"knnsearch centroidsPath $cp must hold (cid, cv) columns, " +
             s"got ${c.columns.mkString(", ")}")
@@ -161,7 +162,7 @@ object KnnServe {
     val nodes = src.filter(col("vec_id") >= p.minNodeId)
       .select(col("vec_id"), col("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = spark.read.parquet(s"$artDir/edges")
+    val edges = Sources.parquet(spark)(s"$artDir/edges")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val entry = (p.centroidsPath match {
       case None =>

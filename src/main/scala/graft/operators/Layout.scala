@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** Data-layout operators — the table-maintenance side of a 100 TB lake.
   * Small-file proliferation (streaming sinks, per-task outputs) and
@@ -17,7 +18,7 @@ object Layout {
     */
   def compactParquet(spark: SparkSession, inDir: String, outDir: String,
       targetMB: Int = 128): Long = {
-    val df = spark.read.parquet(inDir)
+    val df = Sources.parquet(spark)(inDir)
     val bytes = new java.io.File(inDir).listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(_.length()).sum

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.TransformSpec
+import graft.sources.Sources
 
 /** Pipeline transformations (SURVEY.md §2.1) — the reference's
   * filter/map (pipeline/PipelineBuilder.java:36-127) plus the
@@ -372,7 +373,7 @@ object Transforms {
       // another row's text/vector; the streaming twin already refuses
       requireUniqueIds(df, cfg.idCol, "decontaminate")
       val spark = df.sparkSession
-      val bench = spark.read.parquet(cfg.benchPath)
+      val bench = Sources.parquet(spark)(cfg.benchPath)
       cfg.mode match {
         case "ngram" =>
           require(bench.columns.contains(cfg.benchText),
@@ -394,7 +395,7 @@ object Transforms {
               "semantic decontaminate requires a `centroidsPath` property " +
                 "(a (cid, cv) parquet — the cell-blocking quantizer; train " +
                 "via Similarity.ivfFit)"))
-          val cen = spark.read.parquet(cenPath)
+          val cen = Sources.parquet(spark)(cenPath)
           require(Set("cid", "cv").subsetOf(cen.columns.toSet),
             s"decontaminate centroidsPath $cenPath must hold (cid, cv) " +
               s"columns, got ${cen.columns.mkString(", ")}")
@@ -458,7 +459,7 @@ object Transforms {
           "ROOT; sourceTable names the vector table the pipeline reads)")
       val (cen, cenDesc) = cfg.centroidsPath match {
         case Some(p) =>
-          val c = spark.read.parquet(p)
+          val c = Sources.parquet(spark)(p)
           require(Set("cid", "cv").subsetOf(c.columns.toSet),
             s"knnindex centroidsPath $p must hold (cid, cv) columns, " +
               s"got ${c.columns.mkString(", ")}")
@@ -605,7 +606,7 @@ object Transforms {
     require(tau > -1.0 && tau <= 1.0,
       s"semdedup tau must be a cosine threshold in (-1, 1], got $tau")
     val cen = props.get("centroidsPath").map { p =>
-      val c = spark.read.parquet(p.toString)
+      val c = Sources.parquet(spark)(p.toString)
       require(Set("cid", "cv").subsetOf(c.columns.toSet),
         s"semdedup centroidsPath $p must hold (cid, cv) columns " +
           s"(got ${c.columns.mkString(", ")}) — train via Similarity.ivfFit")

@@ -221,7 +221,7 @@ object PipelineRunner {
       // stream's lifetime — the semdedup streaming contract).
       case "decontaminate" =>
         val cfg = Transforms.parseDecontaminate(stage.properties)
-        val bench = spark.read.parquet(cfg.benchPath)
+        val bench = Sources.parquet(spark)(cfg.benchPath)
         import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
         cfg.mode match {
           case "ngram" =>
@@ -245,7 +245,7 @@ object PipelineRunner {
               s"decontaminate benchPath ${cfg.benchPath} has no column " +
                 s"`${cfg.benchVec}` (set `benchVector` to the " +
                 "benchmark's embedding column)")
-            val cen = spark.read.parquet(cenPath)
+            val cen = Sources.parquet(spark)(cenPath)
             require(Set("cid", "cv").subsetOf(cen.columns.toSet),
               s"decontaminate centroidsPath $cenPath must hold " +
                 s"(cid, cv) columns, got ${cen.columns.mkString(", ")}")
@@ -274,7 +274,7 @@ object PipelineRunner {
               "the coarse quantizer must stay FIXED for the stream's " +
               "lifetime (train via Similarity.ivfFit); the batch stage " +
               "may derive id_below_k instead"))
-        val cen = spark.read.parquet(cenPath)
+        val cen = Sources.parquet(spark)(cenPath)
         require(Set("cid", "cv").subsetOf(cen.columns.toSet),
           s"knnindex centroidsPath $cenPath must hold (cid, cv) " +
             s"columns, got ${cen.columns.mkString(", ")}")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Sources
 
 /** `corpus_ppl_buckets` (round 10) — CCNet's PERPLEXITY TIER (Wenzek et
   * al. 2020): bucket every document into head / middle / tail terciles
@@ -76,7 +77,7 @@ object CorpusQueries9 extends QueryModule {
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
         .write.parquet(s"$base/counts")
     }
-    s.read.parquet(s"$path/counts")
+    Sources.parquet(s)(s"$path/counts")
   }
 
   /** Per-doc (doc_id, lang, m, s_e) over the FULL corpus — bigram
@@ -105,7 +106,7 @@ object CorpusQueries9 extends QueryModule {
         .agg(count(lit(1)).as("m"), sum(col("e")).as("s_e"))
         .write.parquet(s"$base/bits")
     }
-    s.read.parquet(s"$path/bits")
+    Sources.parquet(s)(s"$path/bits")
   }
 
   /** Attach `tercile` (1/2/3 over (mean_bits, doc_id) per lang, the

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Sources
 import graft.functions.GraftFunctions._
 import graft.operators.Dedup
 
@@ -116,7 +117,7 @@ object DedupQueries3 extends QueryModule {
         .write.parquet(s"$base/pairs")
       st.unpersist()
     }
-    s.read.parquet(s"$path/pairs")
+    Sources.parquet(s)(s"$path/pairs")
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

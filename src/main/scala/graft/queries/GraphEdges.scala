@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Sources
 import graft.operators.GraphRounds.{Keep, loop, undirected}
 
 /** Shared graph EDGE SCANS for the iterative graph family (round 19 —
@@ -43,7 +44,7 @@ object GraphEdges {
         .agg(count(lit(1)).as("cnt"))
         .write.parquet(s"$base/pairs")
     }
-    s.read.parquet(s"$path/pairs")
+    Sources.parquet(s)(s"$path/pairs")
   }
 
   /** The q63 CO-PURCHASE edge scan (round 20 — VERDICT r19 task 5):
@@ -70,7 +71,7 @@ object GraphEdges {
         .distinct()
         .write.parquet(s"$base/pairs")
     }
-    s.read.parquet(s"$path/pairs")
+    Sources.parquet(s)(s"$path/pairs")
   }
 
   /** The per-doc simhash60 SIGNATURE over full `documents` (round 20
@@ -93,7 +94,7 @@ object GraphEdges {
             graft.functions.GraftFunctions.words(col("text"))).as("sh"))
         .write.parquet(s"$base/sigs")
     }
-    s.read.parquet(s"$path/sigs")
+    Sources.parquet(s)(s"$path/sigs")
   }
 
   /** The FULL-CORPUS simhash connected-component LABELING over
@@ -133,7 +134,7 @@ object GraphEdges {
         .select(col("id").cast("long"), col("component").cast("long"))
         .write.parquet(s"$base/comp")
     }
-    s.read.parquet(s"$path/comp")
+    Sources.parquet(s)(s"$path/comp")
   }
 
   /** The bipartite ORDER–PART edge scan over full lineitem (round 20
@@ -144,16 +145,20 @@ object GraphEdges {
     * consumer — the q63 copurchase precedent (which pins strictly MORE
     * derivation: its self-joined pair set). The quadratic self-join +
     * support rollup stay per-pass: only the scan-side base is shared.
+    * Both keys are pinned as BIGINT, as the sibling artifacts pin theirs,
+    * whatever integer width the source table carries.
     */
   def orderPartPairs(s: SparkSession, dir: String): DataFrame = {
     val path = graft.GraftSession.pinnedArtifact(s, "order_part_pairs",
-      dir, Seq("kind" -> "order_part_pairs", "table" -> "lineitem")) {
+      dir, Seq("kind" -> "order_part_pairs", "table" -> "lineitem",
+        "keys" -> "bigint")) {
       base =>
         Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey")).distinct()
+          .select(col("l_orderkey").cast("long"), col("l_partkey").cast("long"))
+          .distinct()
           .write.parquet(s"$base/pairs")
     }
-    s.read.parquet(s"$path/pairs")
+    Sources.parquet(s)(s"$path/pairs")
   }
 
   /** The fixed seed set of the seed-centrality queries (q126_harmonic,
@@ -212,7 +217,7 @@ object GraphEdges {
         .write.parquet(s"$base/walks")
       edges.unpersist(blocking = false)
     }
-    s.read.parquet(s"$path/walks")
+    Sources.parquet(s)(s"$path/walks")
   }
 
   /** The part CO-ORDER pair scan (lineitem ⋈ lineitem on the order
@@ -238,6 +243,6 @@ object GraphEdges {
         .select(col("src"), col("dst"))
         .write.parquet(s"$base/pairs")
     }
-    s.read.parquet(s"$path/pairs")
+    Sources.parquet(s)(s"$path/pairs")
   }
 }

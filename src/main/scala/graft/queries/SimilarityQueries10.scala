@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Sources
 import graft.functions.GraftFunctions._
 import graft.operators.Clustering
 
@@ -236,10 +237,10 @@ object SimilarityQueries10 extends QueryModule {
         .write.parquet(s"$base/medoid")
       top2.unpersist(false)
       }
-      val cents = s.read.parquet(s"$partsPath/cents")
-      val edges = s.read.parquet(s"$partsPath/edges")
+      val cents = Sources.parquet(s)(s"$partsPath/cents")
+      val edges = Sources.parquet(s)(s"$partsPath/edges")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val medoid = s.read.parquet(s"$partsPath/medoid")
+      val medoid = Sources.parquet(s)(s"$partsPath/medoid")
       // entry: top-Beam cells per (variant, anchor) by integer d2; the
       // entry node is the cell medoid — for seed cells whose centroid
       // is itself a corpus vector this recovers the centroid-as-node

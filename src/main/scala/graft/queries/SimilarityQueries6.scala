@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Sources
 import graft.functions.GraftFunctions.cosine_sim
 
 /** Round-9 similarity additions.
@@ -119,7 +120,7 @@ object SimilarityQueries6 extends QueryModule {
         nodes.select($"vec_id".cast("long").as("vec_id"))
           .write.parquet(s"$base/members")
     }
-    val edges = s.read.parquet(s"$edgesPath/edges")
+    val edges = Sources.parquet(s)(s"$edgesPath/edges")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val anchors = emb.filter($"vec_id" < NAnchors)
       .select($"vec_id".as("q_id"), $"embedding".as("qv"))

@@ -1,6 +1,15 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 import graft.pipeline.SourceSpec
 
 /** Source connectors (SURVEY.md §2.1) — the reference's five source
@@ -145,12 +154,85 @@ object Sources {
 
   private def fileReader(spark: SparkSession, props: Map[String, String]): DataFrame = {
     val fmt = props.getOrElse("format", "text")
-    val reader = spark.read.format(fmt).options(fileOptions(props))
+    val path = props.getOrElse("path",
+      throw new IllegalArgumentException("File source requires path"))
     // explicit schema (DDL string) — required for DROPMALFORMED/
     // FAILFAST csv/json reads, where inference would mask bad rows
-    props.get("schemaDdl").foreach(reader.schema)
-    reader.load(props.getOrElse("path",
-      throw new IllegalArgumentException("File source requires path")))
+    props.get("schemaDdl") match {
+      case None if fmt == "parquet" => parquet(spark, fileOptions(props))(path)
+      case ddl =>
+        val reader = spark.read.format(fmt).options(fileOptions(props))
+        ddl.foreach(reader.schema)
+        reader.load(path)
+    }
+  }
+
+  /** The one parquet reader: `spark.read.options(options).parquet(paths*)`
+    * with its schema taken from ONE file footer on the driver instead of
+    * from Spark's schema-inference job. That job has one task, which
+    * reads the same footer; it cost about 60 ms of job time and driver
+    * gap per read on `local[4]` (sf0.1), half of a short query op.
+    *
+    * The footer is the one Spark's own inference reads
+    * (`ParquetUtils.inferSchema` in Spark 4.1, without `mergeSchema`):
+    *  - the leaf files Spark's `InMemoryFileIndex` lists for these paths
+    *    and options (hidden files skipped but `_metadata` and
+    *    `_common_metadata`, `pathGlobFilter`, `recursiveFileLookup`,
+    *    `key=value` partition dirs), sorted by path string;
+    *  - the first `_common_metadata` wins, then the first `_metadata`,
+    *    then the first data file.
+    * It is read as the inference job reads it
+    * (`ParquetFooterReader.readFooter`, row groups skipped) and converted
+    * by `ParquetFileFormat.readSchemaFromFooter` with the session's
+    * conversion confs, so Spark's row-metadata schema, `nanosAsLong` and
+    * NTZ inference apply as they do there. Partition columns are not in a
+    * footer, so Spark still infers them from the paths.
+    *
+    * Spark's own inference resolves the read when `mergeSchema` is on (as
+    * an option or as `spark.sql.parquet.mergeSchema`: that contract reads
+    * every footer), when a path is a glob (Spark expands it), when no file
+    * is listed, and when the footer cannot be read: Spark's own error (or
+    * its `ignoreCorruptFiles` skip) stands.
+    * Nothing is cached; each read opens its footer, so a rewritten file
+    * is seen at once. ParquetReadSpec pins the schema equal to Spark's and
+    * fails on a parquet read anywhere else under `src/main/scala` but
+    * `StateDir`, whose versions record their `_schema`.
+    */
+  def parquet(spark: SparkSession, options: Map[String, String] = Map.empty)(
+      paths: String*): DataFrame = {
+    val reader = spark.read.options(options)
+    footerSchema(spark, options, paths).fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  private def footerSchema(spark: SparkSession, options: Map[String, String],
+      paths: Seq[String]): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (new ParquetOptions(options, conf).mergeSchema ||
+        paths.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else try {
+      val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+      val roots = paths.map { p =>
+        val path = new Path(p)
+        path.getFileSystem(hadoopConf).makeQualified(path)
+      }
+      val leaves = new InMemoryFileIndex(spark, roots, options, None)
+        .allFiles().sortBy(_.getPath.toString)
+      val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+        ParquetFileWriter.PARQUET_METADATA_FILE)
+      summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+        .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+        .map { file =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(file, hadoopConf), SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+            new ParquetToSparkSchemaConverter(
+              assumeBinaryIsString = conf.isParquetBinaryAsString,
+              assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+              inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+              nanosAsLong = conf.legacyParquetNanosAsLong,
+              respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+        }
+    } catch { case NonFatal(_) => None }
   }
 
   /** Option mapping shared by batch+stream file reads. The reference's

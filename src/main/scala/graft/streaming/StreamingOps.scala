@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.sources.Sources
 
 case class EventRow(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double, props: String)
@@ -19,12 +20,12 @@ case class SessionOut(user_id: Long, start_us: Long, end_us: Long, n_events: Lon
 object StreamingOps {
 
   /** Streaming read of the events table (ns timestamps handled as in
-    * Tables.events); schema comes from a batch probe. Note: the table is
-    * a single file, so local tests see exactly one micro-batch.
+    * Tables.events); schema comes from the table file's footer. Note: the
+    * table is a single file, so local tests see exactly one micro-batch.
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batch = spark.read.parquet(s"$dir/events.parquet")
+    val batch = Sources.parquet(spark)(s"$dir/events.parquet")
     // the table is a single file; a streaming file source needs a
     // directory, so stream the parent with a glob on the table file
     graft.Tables.normalizeEventTs(
@@ -170,7 +171,7 @@ object StreamingOps {
         val staged = batch.dropDuplicates(keyCols)
         val merged =
           if (dir.exists("data"))
-            spark.read.parquet(dir.path("data")).unionByName(staged)
+            Sources.parquet(spark)(dir.path("data")).unionByName(staged)
               .dropDuplicates(keyCols)
           else staged
         merged.write.mode("overwrite").parquet(dir.path("_staging"))
@@ -993,9 +994,9 @@ object StreamingOps {
     // FOREVER (a false-stale verdict no re-export can clear). The
     // distinct-src fallback only serves pre-members-layout artifacts.
     val idxNodes = (if (artifact.exists("members"))
-      spark.read.parquet(s"$artifactPath/members")
+      Sources.parquet(spark)(s"$artifactPath/members")
         .select(col("vec_id").as("id"))
-    else spark.read.parquet(s"$artifactPath/edges")
+    else Sources.parquet(spark)(s"$artifactPath/edges")
       .select(col("src").as("id")).distinct())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = members
@@ -1186,7 +1187,7 @@ object StreamingOps {
     * proves streamed clean/reject partitions equal the batch stage's
     * split and that re-delivered batches do not duplicate rows.
     *
-    * Reading the outputs: `spark.read.parquet(s"$outDir/data")` /
+    * Reading the outputs: `Sources.parquet(spark)(s"$outDir/data")` /
     * `(deadLetterPath)` — the `batch` partition column is the
     * provenance audit trail. The micro-batch is scanned once: the
     * flagged batch persists for its three readers (rejects, clean,
@@ -2042,7 +2043,7 @@ object StreamingOps {
     * there is no append/marker window; the outDir is bound to the
     * checkpoint query id ([[StateDir.bindQueryIdentity]]) and a batch id
     * at or below the newest written batch whose own dir is absent is
-    * refused as a reset. Readers `spark.read.parquet(outDir + "/data")` — the
+    * refused as a reset. Readers `Sources.parquet(spark)(outDir + "/data")` — the
     * `batch` partition column carries replay provenance. Scd2EnrichSpec
     * proves the streamed output equals the batch q95 join against the
     * final dimension when the dimension is fed first.

@@ -24,7 +24,7 @@ object ScaleProbe {
 
     def replicate(name: String, idCols: Seq[String], perturbText: Boolean): Unit = {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val baseDf = spark.read.parquet(s"$sf/$name.parquet")
+      val baseDf = graft.Tables.load(spark, sf, name)
       val copiesDf = (0 until copies).map { k =>
         val shifted = idCols.foldLeft(baseDf) { (d, c) =>
           d.withColumn(c, col(c) + lit(k.toLong * 100000000L)) }
@@ -42,7 +42,7 @@ object ScaleProbe {
     // 100x per round: 38s -> explosion when nation was duplicated)
     def copyOnce(name: String): Unit = {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$sf/$name.parquet")
+      graft.Tables.load(spark, sf, name)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
     }
     // SPARK_GRAFT_SCALE_REUSE=1 skips re-replication when a prior run's
